@@ -1,0 +1,1 @@
+"""semlink benchmark package; the entry point is ``perfbench/run.py``."""
