@@ -67,14 +67,13 @@ class SemlinkConfig:
     # --- clustering (SURVEY C2-C5) ---
     max_cc_iterations: int = 50
     checkpoint_dir: str = "/tmp/semlink_ckpt"
-    # Superstep lineage-cut mechanism: "local" (localCheckpoint — the
-    # fast path; blocks are executor-memory/disk and GC-managed) or
-    # "table" (durable TableIO parquet/Iceberg commits — the resumable
+    # Where the one CC superstep loop cuts lineage after each round:
+    # "local" (localCheckpoint — the fast path; blocks are
+    # executor-memory/disk and GC-managed) or "table" (durable TableIO
+    # commits of `edges_step_<i>` string-id edges — the resumable
     # north-rule protocol). run_connected_components FORCES "table"
-    # whenever resume/stop_after_step is requested, so the durable
-    # protocol is always in effect when a caller relies on it; "local"
-    # only changes where the per-superstep cut lives, never the
-    # labels (round-6 optimization; guide §5 localCheckpoint).
+    # whenever resume/stop_after_step is requested; the mode never
+    # changes the labels (round-6 optimization; guide §5).
     cc_checkpoint: str = "local"
     # Small-graph finishing step: when the materialized edge set is at
     # most this many rows, labels come from a driver union-find (same
@@ -82,23 +81,19 @@ class SemlinkConfig:
     # paying ~6 s of superstep machinery for a kilobyte graph. The
     # bound keeps driver work broadcast-threshold-sized (64k edges is
     # a few MB); 0 disables. Durable/resume runs always take the
-    # superstep path.
+    # superstep loop.
     cc_local_fastpath_edges: int = 65_536
-    # Encode mention-id strings to dense longs before the supersteps?
-    # The encode/decode costs ~4 extra passes over the edge relation
-    # (node distinct, rank, encode join, decode join); it pays when
-    # superstep count × string-vs-long shuffle savings exceeds that —
-    # deep generic graphs (O(log² n) rounds), not the pipeline's
-    # hub-bounded diameter-2 graph (2 rounds; A/B at bench scale:
-    # encoded 8.6-9.9 s vs direct 6.4-6.7 s, labels hash-identical).
-    # Durable runs ALWAYS encode (the resume layout stores node_ids).
-    cc_encode_ids: bool = False
 
     # --- IO ---
     table_format: str = "parquet"          # "iceberg" on a real cluster (io.py)
     shuffle_partitions: int = 32
 
     extra_spark_conf: dict = field(default_factory=dict)
+
+    def __post_init__(self):
+        if self.cc_checkpoint not in ("local", "table"):
+            raise ValueError("cc_checkpoint must be 'local' or 'table', "
+                             f"got {self.cc_checkpoint!r}")
 
 
 DEFAULT = SemlinkConfig()

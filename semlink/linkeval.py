@@ -63,15 +63,15 @@ def sorted_neighborhood_pairs(recs: DataFrame, sort_col: str, window: int,
     pair whose ranks differ by less than ``window`` — rec_l is always
     the lower-RANK record, so each pair appears exactly once.
 
-    Scale shape: the global rank uses the same two-phase pattern as
-    cluster._dense_rank_ids (range-repartition → local row_number +
-    driver prefix-sum of per-partition counts, broadcast back) — no
-    SinglePartition exchange; the rank result is invariant to where
-    the range cuts land. The rank-adjacency predicate is then a BANDED
-    EQUI JOIN: block = (rn-1) div window, the right side replicated to
-    its own and its predecessor block, so each row meets at most
-    2·window candidates before the rank filter — never a post-join
-    filter over an unbounded comparison space (the repo band rule)."""
+    Scale shape: the global rank is two-phase (range-repartition →
+    local row_number + driver prefix-sum of per-partition counts,
+    broadcast back) — no SinglePartition exchange; the rank result is
+    invariant to where the range cuts land. The rank-adjacency
+    predicate is then a BANDED EQUI JOIN: block = (rn-1) div window,
+    the right side replicated to its own and its predecessor block,
+    so each row meets at most 2·window candidates before the rank
+    filter — never a post-join filter over an unbounded comparison
+    space (the repo band rule)."""
     spark = recs.sparkSession
     n_parts = spark.sparkContext.defaultParallelism
     ranked = (recs.repartitionByRange(n_parts, sort_col, rec_id_col)

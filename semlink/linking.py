@@ -301,7 +301,7 @@ def attach_page_features(cands: DataFrame, pages: DataFrame) -> DataFrame:
 # ------------------------------------------------------------ context resolution
 
 def relatedness_table(page_links: DataFrame, entities: DataFrame,
-                      cfg: SemlinkConfig = DEFAULT,
+                      cfg: SemlinkConfig = DEFAULT, *,
                       materialize: bool = True) -> DataFrame:
     """X6 precompute: Milne-Witten relatedness between entity pages
     (Milne & Witten CIKM'08, the measure the reference's context
@@ -338,8 +338,7 @@ def relatedness_table(page_links: DataFrame, entities: DataFrame,
     if materialize:
         # ``materialize=False`` skips the cut — plan-audit only (the
         # checkpoint truncates lineage to a LogicalRDD, hiding the
-        # LeftSemi entity reduction the audit asserts on), same
-        # convention as cluster._dense_rank_ids
+        # LeftSemi entity reduction the audit asserts on)
         il = il.localCheckpoint(eager=True)
     sizes = il.groupBy("e").agg(F.count(F.lit(1)).alias("n_in"))
     # N stays lazy: a 1-row aggregate cross-joined in (no driver action)

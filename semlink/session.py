@@ -29,6 +29,7 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -56,8 +57,10 @@ def get_spark(
         # local[N] the driver JVM IS the executor (N task threads +
         # Arrow batches + localCheckpoint blocks share one heap), so
         # size it for that; a real cluster sizes executors separately
-        # and overrides via spark-submit (sandbox: 128 GiB host).
-        .config("spark.driver.memory", os.environ.get("SEMLINK_DRIVER_MEM", "16g"))
+        # and overrides via spark-submit. At most a third of RAM: the
+        # JVM's resident size runs well past its heap.
+        .config("spark.driver.memory", os.environ.get(
+            "SEMLINK_DRIVER_MEM", f"{min(16 << 30, ram // 3) >> 20}m"))
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra or {}).items():

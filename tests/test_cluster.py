@@ -1,6 +1,8 @@
 """C2-C7: large-star/small-star CC vs a Python union-find oracle;
 checkpoint/resume byte-identity."""
 import hashlib
+import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -37,17 +39,33 @@ def _graphs():
         if a != b:
             rnd.append((f"r{a:03d}", f"r{b:03d}"))
     two = [("a", "b"), ("c", "d"), ("e", "f"), ("b", "c")]
-    return {"chain": chain, "star": star, "random": rnd, "mixed": two}
+    return {"chain": chain, "star": star, "random": rnd, "mixed": two,
+            "empty": []}
+
+
+# the three ways run_connected_components can compute labels: the
+# driver union-find fast path (default config on a small graph), the
+# superstep loop with local cuts, and the loop with durable table cuts
+_PATHS = {
+    "fastpath": SemlinkConfig(),
+    "local": SemlinkConfig(cc_local_fastpath_edges=0),
+    "table": SemlinkConfig(cc_checkpoint="table"),
+}
 
 
 @pytest.mark.parametrize("name", list(_graphs().keys()))
 def test_cc_matches_union_find(spark, tmp_path, name):
+    """Every path yields the oracle's min-member labels, so the paths
+    equal each other; only the table loop writes superstep tables."""
     edges = _graphs()[name]
     df = spark.createDataFrame(edges, "src string, dst string")
-    cfg = SemlinkConfig(checkpoint_dir=str(tmp_path / name))
-    labels = run_connected_components(df, cfg, ckpt_dir=str(tmp_path / name))
-    got = {r.mention_id: r.cluster_id for r in labels.collect()}
-    assert got == _uf_oracle(edges)
+    want = _uf_oracle(edges)
+    for path, cfg in _PATHS.items():
+        ckpt = tmp_path / path
+        labels = run_connected_components(df, cfg, ckpt_dir=str(ckpt))
+        got = {r.mention_id: r.cluster_id for r in labels.collect()}
+        assert got == want, path
+        assert ckpt.is_dir() == (path == "table"), path
 
 
 def test_cc_resume_identical(spark, tmp_path):
@@ -64,33 +82,32 @@ def test_cc_resume_identical(spark, tmp_path):
     assert r is None
     resumed = run_connected_components(df, cfg, ckpt_dir=d2, resume=True)
     assert sorted(map(tuple, resumed.collect())) == full_rows
+    # the durable layout is the superstep edge tables and nothing else
+    tables = os.listdir(d2)
+    assert tables and all(
+        re.fullmatch(r"edges_step_\d+\.parquet", t) for t in tables), tables
 
 
-def test_cc_local_checkpoint_equals_table(spark, tmp_path):
-    """The default fast lineage cut (cc_checkpoint='local') must
-    produce labels identical to the durable table-commit protocol —
-    the round-6 optimization changes WHERE the per-superstep cut
-    lives, never the labels."""
-    edges = _graphs()["chain"] + _graphs()["random"] + _graphs()["mixed"]
-    df = spark.createDataFrame(edges, "src string, dst string")
-    t = run_connected_components(
-        df, SemlinkConfig(cc_checkpoint="table"),
-        ckpt_dir=str(tmp_path / "tbl"))
-    loc = run_connected_components(
-        df, SemlinkConfig(cc_checkpoint="local"),
-        ckpt_dir=str(tmp_path / "loc"))
-    assert sorted(map(tuple, loc.collect())) == \
-        sorted(map(tuple, t.collect()))
-    # local mode must not have written any superstep tables
-    import os
-    assert not os.path.isdir(str(tmp_path / "loc"))
-    # and the size-gated union-find fast path must equal the local
-    # SUPERSTEP path too (cap=0 disables the fast path)
-    steps = run_connected_components(
-        df, SemlinkConfig(cc_checkpoint="local", cc_local_fastpath_edges=0),
-        ckpt_dir=str(tmp_path / "loc0"))
-    assert sorted(map(tuple, steps.collect())) == \
-        sorted(map(tuple, loc.collect()))
+def test_cc_resume_refuses_other_id_types(spark, tmp_path):
+    """A committed superstep whose ids are not the input edges' type
+    (here bigint, as an id-encoding layout wrote them) must fail
+    loudly instead of resuming into labels of the wrong ids."""
+    from semlink.io import TableIO
+
+    ckpt = str(tmp_path / "old")
+    TableIO(root=ckpt).write(
+        spark.createDataFrame([(2, 1), (3, 1)], "src bigint, dst bigint"),
+        "edges_step_0")
+    df = spark.createDataFrame(_graphs()["mixed"], "src string, dst string")
+    with pytest.raises(ValueError, match="rerun without resume") as e:
+        run_connected_components(df, SemlinkConfig(), ckpt_dir=ckpt,
+                                 resume=True)
+    assert ckpt in str(e.value)
+
+
+def test_cc_checkpoint_mode_validated():
+    with pytest.raises(ValueError, match="cc_checkpoint"):
+        SemlinkConfig(cc_checkpoint="durable")
 
 
 def test_singletons_and_f1(spark, tmp_path):
@@ -109,35 +126,6 @@ def test_singletons_and_f1(spark, tmp_path):
     assert m["tp"] == 1 and m["fn"] == 1 and m["fp"] == 0
     assert abs(m["precision"] - 1.0) < 1e-12
     assert abs(m["recall"] - 0.5) < 1e-12
-
-
-def test_dense_rank_ids_distributed_equivalence(spark):
-    """Two-phase rank == global row_number for any partitioning, with
-    no single-partition exchange in the plan (VERDICT r01 wrong #2)."""
-    import io as _io
-    from contextlib import redirect_stdout
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from semlink.cluster import _dense_rank_ids
-
-    nodes = spark.createDataFrame(
-        [(f"m{i:06d}",) for i in range(0, 9000, 11)],
-        "mention_id string").repartition(17)
-    got = _dense_rank_ids(nodes, num_parts=7)
-    want = nodes.withColumn(
-        "nid", F.row_number().over(Window.orderBy("mention_id")).cast("long"))
-    assert got.exceptAll(want).count() == 0
-    assert want.exceptAll(got).count() == 0
-
-    buf = _io.StringIO()
-    with redirect_stdout(buf):
-        got.explain("formatted")
-    assert "SinglePartition" not in buf.getvalue()
-
-    empty = spark.createDataFrame([], "mention_id string")
-    assert _dense_rank_ids(empty).count() == 0
 
 
 def test_pairwise_f1_null_endpoints_count_as_fn(spark):
@@ -161,8 +149,6 @@ def test_cc_path_graph_depth(spark, tmp_path):
     the worst case for star-contraction rounds — must converge to ONE
     cluster labeled by the minimum node in O(log n) supersteps, bounding
     the checkpoint-commit count the cluster stage pays per run."""
-    import os
-
     from pyspark.sql import functions as F
 
     from semlink.cluster import run_connected_components
@@ -185,8 +171,7 @@ def test_cc_path_graph_depth(spark, tmp_path):
         F.count_distinct("cluster_id").alias("k"),
         F.min("cluster_id").alias("mn")).first()
     assert (got.n, got.k, got.mn) == (n, 1, ids[0])
-    steps = len([d for d in os.listdir(ckpt) if d.startswith("edges_step_")
-                 and not d.endswith("init")])
+    steps = len([d for d in os.listdir(ckpt) if d.startswith("edges_step_")])
     # large/small-star halves path depth per round: measured exactly 14
     # supersteps at 2^12 and 18 at 2^16 (≈ log2 n + 2, incl. the
     # fingerprint-equal convergence step); anything near

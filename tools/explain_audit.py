@@ -90,23 +90,6 @@ def main():
     checks.append(("no row-wise BatchEvalPython anywhere",
                    "BatchEvalPython" not in p4))
 
-    # 5. CC node-id encode is fully distributed (VERDICT r01 wrong #2):
-    # no single-partition exchange anywhere in the rank plan
-    from pyspark.sql import functions as F2
-    from semlink.cluster import _dense_rank_ids
-    # audit the rank itself over a clean scan-derived node source —
-    # resolved's lineage legitimately contains a 1-row global aggregate
-    # (the MW n_pages count) that is SinglePartition by nature
-    nodes = t.select(F2.concat_ws(
-        ":", "conv_id", F2.col("turn_idx").cast("string"))
-        .alias("mention_id")).distinct()
-    p5 = formatted(_dense_rank_ids(nodes, num_parts=8, materialize=False))
-    sections["CC node-id encode (two-phase rank)"] = p5
-    checks.append(("node-id rank has no SinglePartition exchange",
-                   "SinglePartition" not in p5))
-    checks.append(("node-id rank range-partitions the nodes",
-                   "rangepartitioning" in p5.lower()))
-
     # 6. relatedness self-join is capped + aggregated with partial aggs
     from semlink.linking import relatedness_table
     # materialize=False: the round-6 localCheckpoint of the capped
@@ -149,7 +132,7 @@ def main():
 
     # 7. large-dictionary first-word gate is a broadcast semi join
     fw_df = anchors.select(
-        F2.split("anchor_norm", " ").getItem(0).alias("w")).distinct()
+        F.split("anchor_norm", " ").getItem(0).alias("w")).distinct()
     gated = generate_mentions(t, first_words=fw_df)
     p7 = formatted(gated)
     sections["first-word gate (DataFrame form, F4)"] = p7
