@@ -4,7 +4,7 @@ collapses into one frozen dataclass; Spark engine knobs go through
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -12,16 +12,13 @@ class SemlinkConfig:
     """All pipeline knobs in one place.
 
     Mirrors the reference's per-language settings surface (max n-gram
-    length, normalization flags, filter thresholds) plus the scale knobs
-    the north rule requires (salting, checkpointing).
+    length, filter thresholds) plus the scale knobs the north rule
+    requires (salting, checkpointing). Every field is read by the
+    engine (tests/test_config.py).
     """
 
     # --- text / mention generation (SURVEY T1-T4) ---
     max_ngram_len: int = 3                 # reference `max_ngram_length`
-    normalize_dash: bool = True            # reference `normalize=dash`
-    normalize_accents: bool = True         # reference `normalize=accents`
-    normalize_lower: bool = True           # reference `normalize=lower`
-    strip_punctuation: bool = True
     # full-Unicode blocking keys via the Arrow pandas-UDF normalizer
     # (textnorm.normalize_unicode_udf) — for CJK/non-Latin corpora;
     # default False keeps the pure-codegen ASCII path
@@ -32,10 +29,8 @@ class SemlinkConfig:
     min_link_prob: float = 0.0
     largest_matching_only: bool = True     # reference `largest_matching`
     skip_stopword_mentions: bool = False   # F4: drop bare-stopword keys
-    top_k_senses: int = 5
 
     # --- pairwise scoring (SURVEY X*, J3) ---
-    pair_block_cap: int = 1000             # max mentions per block kept for pairing
     match_threshold: float = 0.5           # score above which a pair is an edge
     # weight of context relatedness vs prior: score = prior·(1 + W·Σ mw_rel)
     # with mw_rel the Milne-Witten log-normalized relatedness ∈ [0,1].
@@ -44,7 +39,6 @@ class SemlinkConfig:
     # head anchors), so W > ratio−1; weak contexts (mw_rel ≪ 1) then
     # still defer to the prior, which is the MW disambiguation intent
     context_weight: float = 32.0
-    max_metric_strlen: int = 64            # cap for the numpy Levenshtein/JW kernel
     # max entity-outlinks per source page in the relatedness self-join;
     # a source above the cap contributes >K² pair rows and ~no signal
     # (Milne-Witten's log discount); bounds the join fan-out at K·|il|
@@ -87,8 +81,6 @@ class SemlinkConfig:
     # --- IO ---
     table_format: str = "parquet"          # "iceberg" on a real cluster (io.py)
     shuffle_partitions: int = 32
-
-    extra_spark_conf: dict = field(default_factory=dict)
 
     def __post_init__(self):
         if self.cc_checkpoint not in ("local", "table"):

@@ -110,34 +110,20 @@ def shingles_exploded(df: DataFrame, id_col: str = "doc_id",
 def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
                        text_col: str = "text",
                        k: int = MINHASH_K,
-                       shingle_n: int = 3,
-                       impl: str = "exploded") -> DataFrame:
+                       shingle_n: int = 3) -> DataFrame:
     """(id, mh_0..mh_{k-1}): min over shingles of md5(i:shingle).
 
     The per-permutation "hash" is the lexicographic min of a salted
     md5 — portable (identical in DuckDB), seedless, deterministic.
 
-    Default impl='exploded': shingle rows through the codegen explode,
-    then ONE groupBy(id) with k partial-min aggregates — map-side
-    combined, so the single shuffle moves one row per (doc, partition).
-    Duplicate shingles don't need deduping first (min is
-    duplicate-insensitive). impl='hof' is the round-2 no-shuffle array
-    form whose transform lambdas serialize across task threads (kept
-    for the scaling comparison; tools/datapipe_scaling.py measures
-    both).
+    Shingle rows come from the codegen explode, then ONE groupBy(id)
+    with k partial-min aggregates — map-side combined, so the single
+    shuffle moves one row per (doc, partition). Duplicate shingles
+    don't need deduping first (min is duplicate-insensitive). This form
+    won its A/B against a per-row array of transform lambdas at both
+    local[8] and local[32] (19.1/15.2 s vs 39.0/20.9 s, BENCH/BASELINE.md
+    §4c).
     """
-    if impl == "hof":
-        d = df.select(F.col(id_col),
-                      shingle_set(F.col(text_col), shingle_n).alias("sh"))
-
-        def mh(i: int):
-            # NB: the transform lambda must be unary — PySpark passes
-            # the element index as a second arg if the lambda takes one
-            return F.array_min(F.transform(
-                F.col("sh"),
-                lambda s: F.md5(F.concat_ws(":", F.lit(str(i)), s))))
-
-        return d.withColumns({f"mh_{i}": mh(i) for i in range(k)}).drop("sh")
     sh = shingles_exploded(df, id_col, text_col, shingle_n)
     return sh.groupBy(id_col).agg(
         *[F.min(F.md5(F.concat_ws(":", F.lit(str(i)), F.col("s"))))

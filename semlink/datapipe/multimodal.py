@@ -36,18 +36,10 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (BinaryType, DoubleType, LongType, StringType,
-                               StructField, StructType)
+from pyspark.sql.types import (DoubleType, LongType, StringType, StructField,
+                               StructType)
 
 from .jpegenc import ZIGZAG, idct2d
-
-MEDIA_SCHEMA = StructType([
-    StructField("media_id", StringType(), False),
-    StructField("kind", StringType(), False),        # image|audio|video
-    StructField("mime", StringType(), True),
-    StructField("payload", BinaryType(), True),       # opaque bytes
-    StructField("n_bytes", LongType(), True),
-])
 
 FEATURE_SCHEMA = StructType([
     StructField("media_id", StringType(), False),
@@ -682,11 +674,6 @@ def decode_wav_samples(payload: bytes) -> dict:
                 "digest": hashlib.md5(data.hex().encode()).hexdigest()}
     except (struct.error, IndexError, ValueError):
         return none
-
-
-def _be4(col):
-    """int column → 4 big-endian bytes, as a binary expression."""
-    return F.unhex(F.lpad(F.hex(col.cast("bigint")), 8, "0"))
 
 
 def _hex2(col):

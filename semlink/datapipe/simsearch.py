@@ -1,18 +1,11 @@
 """Similarity search over embedding columns (array<float>).
 
-- Cosine kernel: three implementations, MEASURED head-to-head at 8 vs
-  32 cores on 2M 64-dim pairs (tools/datapipe_scaling.py, round 3):
-  HOF-lambda SQL 8.9s→6.0s (eff 0.37), Arrow numpy UDF 6.6s→9.7s
-  (ANTI-scales — shipping 2×dim doubles per row through Arrow costs
-  more than the compute; 32 workers contend on memory bandwidth), and
-  a fixed-dim unrolled codegen expression 18.7s→13.0s (192 element_at
-  ops blow past JIT/codegen sweet spots). VERDICT r02's hypothesis
-  that the HOF lambda serializes (0.97× on STRING lambdas) does NOT
-  reproduce for arithmetic lambdas — double-arithmetic HOF folds scale
-  ~0.37-0.40 here, the best of the three. ``impl='sql'`` is therefore
-  the measured default; 'arrow' and 'fixed' are kept as the
-  alternatives with the numbers above (negative results documented,
-  same discipline as round 2's element_at explode).
+- Cosine kernel: one JVM-side HOF-fold expression (:func:`cosine_expr`).
+  It won its recorded A/B (BENCH/BASELINE.md §4c, 2M 64-dim pairs,
+  local[8] vs local[32]): HOF fold 8.9s→6.0s, Arrow numpy UDF
+  6.6s→9.7s (anti-scales: shipping 2×dim doubles per row through
+  Arrow costs more than the compute), unrolled element_at codegen
+  18.7s→13.0s.
 - Brute-force cosine top-k: the exactness baseline. Quadratic;
   at scale use it only within partitions/cells.
 - IVF: a REAL coarse quantizer — deterministic seeds (the k lowest-id
@@ -30,47 +23,14 @@ are deterministic and oracle-comparable.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType
-
-
-@F.pandas_udf(DoubleType())
-def cosine_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Arrow-batched cosine: one (batch, dim) numpy matrix per side,
-    einsum row dot products — no per-row Python, no HOF lambda.
-
-    Measured ANTI-scaling on this host (module docstring): the Arrow
-    transfer of both embedding arrays dominates; kept as the any-dim
-    fallback and for environments where Python workers are remote from
-    the JVM's memory-bandwidth contention.
-
-    Nulls / zero vectors → 0.0 (matches cosine_expr). Embedding columns
-    are fixed-dim by contract; a ragged batch would make np.asarray
-    yield dtype=object and is rejected loudly rather than mis-summed.
-    """
-    null = (a.isna() | b.isna()).to_numpy()
-    out = np.zeros(len(a))
-    if (~null).any():
-        A = np.asarray(a[~null].tolist(), dtype=np.float64)
-        B = np.asarray(b[~null].tolist(), dtype=np.float64)
-        if A.ndim != 2 or B.ndim != 2:
-            raise ValueError("cosine_udf requires fixed-dimension embeddings")
-        dot = np.einsum("ij,ij->i", A, B)
-        na = np.sqrt(np.einsum("ij,ij->i", A, A))
-        nb = np.sqrt(np.einsum("ij,ij->i", B, B))
-        ok = (na > 0) & (nb > 0)
-        out[~null] = np.where(ok, dot / np.where(ok, na * nb, 1.0), 0.0)
-    return pd.Series(out)
 
 
 def cosine_expr(a: str, b: str) -> Column:
     """Cosine similarity as a pure SQL expression (HOF lambdas),
-    JVM-side — the measured-fastest variant on this host (module
-    docstring) and the oracle-parity reference; the default via
-    :func:`cosine_similarity`."""
+    JVM-side — the measured-fastest variant (module docstring) and the
+    oracle-parity reference. Null or zero vectors score 0.0."""
     dot = F.aggregate(
         F.zip_with(F.col(a), F.col(b), lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0), lambda acc, x: acc + x)
@@ -81,44 +41,8 @@ def cosine_expr(a: str, b: str) -> Column:
     return F.when((na > 0) & (nb > 0), dot / (na * nb)).otherwise(F.lit(0.0))
 
 
-def cosine_expr_fixed(a: str, b: str, dim: int) -> Column:
-    """Cosine as a fully UNROLLED codegen expression for fixed-dim
-    embeddings: dim element_at products summed left-associatively.
-    Measured SLOWER than the HOF fold at dim=64 (module docstring —
-    3×dim element_at ops overwhelm JIT/codegen); kept as the
-    documented third point of the measurement. Left-assoc sum = the
-    HOF fold's order, so values are bit-identical to cosine_expr."""
-    def dot(x: str, y: str) -> Column:
-        terms = [F.element_at(F.col(x), j + 1).cast("double")
-                 * F.element_at(F.col(y), j + 1).cast("double")
-                 for j in range(dim)]
-        acc = F.lit(0.0)
-        for t in terms:
-            acc = acc + t
-        return acc
-    d = dot(a, b)
-    na = F.sqrt(dot(a, a))
-    nb = F.sqrt(dot(b, b))
-    return F.when((na > 0) & (nb > 0), d / (na * nb)).otherwise(F.lit(0.0))
-
-
-def cosine_similarity(a: str, b: str, impl: str = "sql",
-                      dim: int | None = None) -> Column:
-    """Dispatch between the three measured cosine implementations
-    (module docstring): 'sql' (HOF fold — measured fastest and the
-    default), 'arrow' (numpy pandas UDF — any-dim fallback), 'fixed'
-    (unrolled codegen, needs dim)."""
-    if impl == "fixed":
-        if dim is None:
-            raise ValueError("impl='fixed' requires dim")
-        return cosine_expr_fixed(a, b, dim)
-    if impl == "arrow":
-        return cosine_udf(F.col(a), F.col(b))
-    return cosine_expr(a, b)
-
-
 def _ranked_topk(joined: DataFrame, k: int) -> DataFrame:
-    sim6 = F.round(cosine_similarity("q_emb", "c_emb") * 1_000_000).cast("bigint")
+    sim6 = F.round(cosine_expr("q_emb", "c_emb") * 1_000_000).cast("bigint")
     w = Window.partitionBy("query_id").orderBy(
         F.desc("sim6"), F.asc("cand_id"))
     return (joined.withColumn("sim6", sim6)
@@ -154,7 +78,7 @@ def cosine_near_dup_edges(embeddings: DataFrame, queries: DataFrame,
     machinery as record linkage). EXACT baseline: the cross join is N²
     — fixture/verification scale only; production uses
     :func:`cosine_near_dup_edges_ivf`."""
-    sim = cosine_similarity("q_emb", "c_emb")
+    sim = cosine_expr("q_emb", "c_emb")
     thr6 = int(round(threshold * 1_000_000))
     return (queries.crossJoin(embeddings)
             .filter(F.col("query_id") < F.col("cand_id"))
@@ -189,7 +113,7 @@ def assign_cells(df: DataFrame, centroids: DataFrame, id_col: str,
     nearest centroids by cosine. centroids(cell, c_emb) is broadcast —
     one scan over df, no shuffle besides the per-id window (partitioned
     by id, never global). Deterministic: scaled-bigint sim, cell-asc tie."""
-    sim6 = F.round(cosine_similarity(emb_col, "c_emb") * 1_000_000).cast("bigint")
+    sim6 = F.round(cosine_expr(emb_col, "c_emb") * 1_000_000).cast("bigint")
     w = Window.partitionBy(id_col).orderBy(F.desc("_csim6"), F.asc("cell"))
     out = (df.crossJoin(F.broadcast(centroids))
            .withColumn("_csim6", sim6)
@@ -277,7 +201,7 @@ def cosine_near_dup_edges_ivf(embeddings: DataFrame, centroids: DataFrame,
                  F.col(emb_col).alias("q_emb"), "cell")
     r = a.select(F.col(id_col).alias("cand_id"),
                  F.col(emb_col).alias("c_emb"), "cell")
-    sim = cosine_similarity("q_emb", "c_emb")
+    sim = cosine_expr("q_emb", "c_emb")
     thr6 = int(round(threshold * 1_000_000))
     return (l.join(r, "cell")
             .filter(F.col("query_id") < F.col("cand_id"))

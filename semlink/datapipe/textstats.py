@@ -25,7 +25,6 @@ WORD_RE = "[A-Za-z]+|[0-9]+"
 
 _LETTERS = ("ABCDEFGHIJKLMNOPQRSTUVWXYZ"
             "abcdefghijklmnopqrstuvwxyz")
-_DIGITS = "0123456789"
 
 
 def _tokens(col: Column) -> Column:
@@ -57,30 +56,12 @@ def _frac6(num: str, den: str) -> Column:
                    / F.greatest(F.col(den), F.lit(1)) * 1_000_000)             .cast("bigint")
 
 
-def word_token_count(col: Column) -> Column:
-    """Regex-free count of maximal [A-Za-z]+ and [0-9]+ runs: classify
-    letters→'a' and digits→'0' with translate (any other char breaks a
-    run, exactly like the regex), collapse runs with bounded replace
-    passes, then count survivors by translate-deletion length diff.
-
-    MEASURED NEGATIVE RESULT (round 4, tools/datapipe_scaling.py
-    'wordtok' cell, 1M docs): regexp_extract_all beats this chain at
-    BOTH widths (regex 5.2 s@8 / 4.3 s@32 vs 8.3 / 5.6) — the
-    thread-serialization cliff is regexp_replace-specific and
-    extract_all scales like every other expression on this host
-    (eff 0.30 vs 0.37). Kept as the documented alternative if a
-    substrate ever serializes extract_all; with_token_stats uses the
-    regex."""
-    cls = F.translate(F.translate(col, _LETTERS, "a" * len(_LETTERS)),
-                      _DIGITS, "0" * len(_DIGITS))
-    collapsed = _collapse_runs(_collapse_runs(cls, "a"), "0")
-    return _count_char(collapsed, "a") + _count_char(collapsed, "0")
-
-
 def with_token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Token counting: whitespace tokens + BPE-ish word/number pieces
-    (regexp_extract_all — measured faster than the translate-classify
-    chain at both 8 and 32 cores; see word_token_count)."""
+    """Token counting: whitespace tokens + BPE-ish word/number pieces.
+
+    Word pieces use regexp_extract_all: it beat a regex-free
+    translate-classify run counter at both local[8] and local[32]
+    (5.2/4.3 s vs 8.3/5.6 s on 1M docs, BENCH/BASELINE.md §8)."""
     t = F.col(text_col)
     return df.withColumns({
         "ws_tokens": F.size(_tokens(t)).cast("bigint"),
@@ -95,17 +76,6 @@ def with_stopword_ratio(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn(
         "stop_ratio",
         F.when(F.size(toks) > 0, F.size(stops) / F.size(toks)).otherwise(F.lit(0.0)))
-
-
-def with_lang_guess(df: DataFrame, text_col: str = "text",
-                    threshold: float = 0.12) -> DataFrame:
-    """Cheap shuffle-free en-vs-other heuristic (English-stopword
-    density). Kept as the zero-shuffle prefilter; the real per-language
-    identifier is :func:`lang_id` below."""
-    d = with_stopword_ratio(df, text_col)
-    return d.withColumn(
-        "lang_guess",
-        F.when(F.col("stop_ratio") >= threshold, F.lit("en")).otherwise(F.lit("other")))
 
 
 # Per-language stopword profiles (public-knowledge high-frequency

@@ -65,12 +65,3 @@ class TableIO:
         spark = df.sparkSession
         self.write(df, name)
         return self.read(spark, name)
-
-
-def read_transcripts(spark: SparkSession, path_or_table: str,
-                     fmt: str = "parquet") -> DataFrame:
-    """Load the north-rule input table
-    (conv_id, turn_idx, role, text, tool, ts) — BASELINE.json input_hint."""
-    if fmt == "iceberg":
-        return spark.read.format("iceberg").load(path_or_table)
-    return spark.read.parquet(path_or_table)

@@ -73,13 +73,6 @@ def apply_model(cands: DataFrame, weights: np.ndarray, bias: float) -> DataFrame
     return cands.withColumn("learning_score", score(F.col("features")))
 
 
-def record_feedback(io, feedback: DataFrame) -> None:
-    """M3: append user-labeled (mention, target, label) rows to the
-    feedback table (the reference's /feedback route becomes an
-    append-only table; training samples from it)."""
-    io.write(feedback, "labeled_feedback", mode="append")
-
-
 def fit_logistic(X: np.ndarray, y: np.ndarray, l2: float = 1e-3,
                  iters: int = 500, lr: float = 0.5) -> tuple[np.ndarray, float]:
     """M2: tiny deterministic batch gradient fit (driver-side, on a

@@ -177,14 +177,11 @@ def with_probabilities(anchors: DataFrame) -> DataFrame:
 # ------------------------------------------------------------ blocking join
 
 def candidate_join(mentions: DataFrame, anchors: DataFrame,
-                   cfg: SemlinkConfig = DEFAULT,
-                   use_broadcast: bool = True) -> DataFrame:
-    """J1: the blocking step — equi join mentions against the anchor
-    dictionary on the normalized surface form."""
+                   cfg: SemlinkConfig = DEFAULT) -> DataFrame:
+    """J1: the blocking step — equi join mentions against the broadcast
+    anchor dictionary on the normalized surface form."""
     a = with_probabilities(anchors).withColumnRenamed("anchor_norm", "ngram_norm")
-    if use_broadcast:
-        a = F.broadcast(a)
-    return mentions.join(a, "ngram_norm", "inner")
+    return mentions.join(F.broadcast(a), "ngram_norm", "inner")
 
 
 def salted_candidate_join(mentions: DataFrame, anchors: DataFrame,
@@ -192,12 +189,14 @@ def salted_candidate_join(mentions: DataFrame, anchors: DataFrame,
                           cfg: SemlinkConfig = DEFAULT) -> DataFrame:
     """J2: skew-safe variant for the shuffle-join regime.
 
-    Measured guidance (BENCH/BASELINE.md §4b): when AQE is available,
-    its runtime skew-join split beats this manual salt (2.8 s vs 6.4 s
-    at 8M skewed rows) — prefer broadcast, then AQE. This path exists
-    for where AQE cannot run: STREAMING stream-static joins (AQE is
-    disabled on streaming queries), or engines with AQE off. It is
-    oracle-verified identical to the plain join (rl_salted_join).
+    Only batch :func:`link_transcripts` with
+    ``cfg.broadcast_dictionary=False`` takes this path; streaming
+    (``streaming.stream_candidates``) uses the broadcast
+    :func:`candidate_join`. Measured guidance (BENCH/BASELINE.md §4b):
+    AQE's runtime skew-join split beat this manual salt (2.8 s vs
+    6.4 s at 8M skewed rows), so prefer broadcast, then AQE; the salt
+    is for engines with AQE off. It is oracle-verified identical to
+    the plain join (rl_salted_join).
 
     ``hot_keys`` is a small DataFrame(anchor_norm) of surface forms whose
     probe-side frequency exceeds cfg.hot_key_min_count (computed from O2

@@ -33,11 +33,6 @@ def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(jaro_winkler_batch(a, b))
 
 
-@F.pandas_udf(DoubleType())
-def levenshtein_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series(levenshtein_batch(a, b).astype("float64"))
-
-
 # return type built as objects, NOT a DDL string: string types are
 # parsed through the active SparkContext at decoration (= import)
 # time, which would make importing this module require a live session

@@ -20,14 +20,6 @@ RAW_LINKS_SCHEMA = T.StructType([
     T.StructField("is_link", T.BooleanType()),
 ])
 
-PAGES_SCHEMA = T.StructType([
-    T.StructField("target_id", T.LongType()),
-    T.StructField("title", T.StringType()),
-    T.StructField("inlink_count", T.LongType()),
-    T.StructField("outlink_count", T.LongType()),
-    T.StructField("is_redirect", T.BooleanType()),
-])
-
 TRANSCRIPTS_SCHEMA = T.StructType([
     T.StructField("conv_id", T.StringType()),
     T.StructField("turn_idx", T.IntegerType()),

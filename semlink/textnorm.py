@@ -132,15 +132,6 @@ def tokenize_expr(col: Column) -> Column:
     return F.array_remove(F.split(F.trim(ws), " "), "")
 
 
-def casing_features(ngram: Column) -> list[Column]:
-    """T5: capitalization-shape features (Meij'12 Table 2)."""
-    return [
-        (ngram == F.initcap(ngram)).cast("int").alias("f_is_initcap"),
-        (ngram == F.upper(ngram)).cast("int").alias("f_is_upper"),
-        (ngram == F.lower(ngram)).cast("int").alias("f_is_lower"),
-    ]
-
-
 # ------------------------------------------------------- Unicode fallback
 
 def normalize_unicode_udf(col: Column) -> Column:

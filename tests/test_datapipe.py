@@ -186,10 +186,8 @@ def test_shingles_exploded_matches_shingle_set(spark):
     for r in shingles_exploded(d, n=3).collect():
         exp.setdefault(r.doc_id, set()).add(r.s)
     assert {k: sorted(v) for k, v in exp.items()} == hof
-
-    a = {tuple(r) for r in minhash_signatures(d, impl="hof").collect()}
-    b = {tuple(r) for r in minhash_signatures(d, impl="exploded").collect()}
-    assert a == b and len(a) == len(rows)
+    # every doc, null and blank ones included, gets one signature row
+    assert minhash_signatures(d).count() == len(rows)
 
 
 def test_stratified_sample_deterministic_and_capped(spark):
@@ -371,27 +369,6 @@ def test_fingerprint_null_text_equals_empty(spark):
             for r in with_fingerprints(d).collect()}
     assert rows[1] is not None
     assert rows[1] == rows[2] == rows[3]
-
-
-def test_word_token_count_matches_regex(spark):
-    """The translate-classify word-token counter (documented regex-free
-    alternative) must agree with regexp_extract_all run counting on
-    mixed alpha/digit/punctuation/unicode text."""
-    from pyspark.sql import functions as F
-
-    from semlink.datapipe.textstats import WORD_RE, word_token_count
-
-    rows = [(1, "a1b"), (2, "abc123 x"), (3, ""), (4, "...!?"),
-            (5, "héllo wörld 42"), (6, "x" * 100 + "9" * 80),
-            (7, "one-two three_four 5.6"), (8, "  spaced   out  7  ")]
-    d = spark.createDataFrame(rows, "doc_id long, text string")
-    got = d.select(
-        "doc_id",
-        F.size(F.regexp_extract_all(F.col("text"), F.lit(WORD_RE), 0))
-        .alias("rx"),
-        word_token_count(F.col("text")).alias("rc")).collect()
-    for r in got:
-        assert r.rx == r.rc, (r.doc_id, r.rx, r.rc)
 
 
 def _encode_gif(idx, w, h, palette, min_code_size=None):

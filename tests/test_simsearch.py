@@ -143,35 +143,26 @@ def test_near_dup_edges_ivf_matches_exact(spark, emb):
     assert len(exact) > 0
 
 
-def test_cosine_impls_agree(spark):
-    """The three cosine implementations (HOF fold, Arrow numpy, unrolled
-    codegen) produce the same sim6 on random-ish vectors, nulls, and
-    zero vectors."""
+def test_cosine_null_zero_and_parallel(spark):
+    """cosine_expr scores null and zero vectors 0, parallel vectors
+    (any positive scale) 1, opposite vectors -1."""
     from pyspark.sql import functions as F
 
-    from semlink.datapipe.simsearch import cosine_similarity
+    from semlink.datapipe.simsearch import cosine_expr
 
-    rows = []
-    for i in range(50):
-        a = [((i * 7 + j) % 13 - 6) / 7.0 for j in range(8)]
-        b = [((i * 11 + 3 * j) % 17 - 8) / 9.0 for j in range(8)]
-        rows.append((i, a, b))
-    rows.append((50, [0.0] * 8, [1.0] * 8))     # zero vector
+    v = [0.5, -1.0, 2.0, 0.25]
+    rows = [(0, v, [2 * x for x in v]),           # parallel
+            (1, v, [-x for x in v]),              # opposite
+            (2, [0.0] * 4, v),                    # zero vector
+            (3, v, [0.0] * 4),
+            (4, None, v),                         # null vector
+            (5, v, None)]
     df = spark.createDataFrame(
         rows, "id int, q_emb array<double>, c_emb array<double>")
-    df = df.unionByName(spark.createDataFrame(
-        [(51, None, [1.0] * 8)],
-        "id int, q_emb array<double>, c_emb array<double>"))
-
-    outs = {}
-    for impl in ("sql", "arrow", "fixed"):
-        col = cosine_similarity("q_emb", "c_emb", impl=impl,
-                                dim=8 if impl == "fixed" else None)
-        outs[impl] = {r.id: r.s6 for r in df.select(
-            "id", F.round(col * 1_000_000).cast("bigint").alias("s6"))
-            .collect()}
-    assert outs["sql"] == outs["arrow"] == outs["fixed"]
-    assert outs["sql"][50] == 0 and outs["sql"][51] == 0
+    got = {r.id: r.s6 for r in df.select(
+        "id", F.round(cosine_expr("q_emb", "c_emb") * 1_000_000)
+        .cast("bigint").alias("s6")).collect()}
+    assert got == {0: 1_000_000, 1: -1_000_000, 2: 0, 3: 0, 4: 0, 5: 0}
 
 
 def test_embed_text_properties(spark):

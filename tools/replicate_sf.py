@@ -35,16 +35,44 @@ OFFSETS = {
 }
 
 
-def main() -> None:
-    src, dst = sys.argv[1], sys.argv[2]
-    n = int(sys.argv[3]) if len(sys.argv) > 3 else 4
+INT64_MAX = 2**63 - 1
+
+
+def check_offsets(table: str, key_max: dict[str, int | None], n: int) -> None:
+    """Refuse a replication whose remapped keys would collide across
+    replicas (a key at or above its stride) or overflow int64."""
+    for c, mx in key_max.items():
+        stride = OFFSETS[c]
+        if mx is not None and mx >= stride:
+            raise ValueError(f"{table}.{c}: max key {mx} >= stride {stride}; "
+                             "replicas would collide")
+        if n * stride > INT64_MAX:
+            raise ValueError(f"{table}.{c}: {n} replicas x stride {stride} "
+                             "overflows int64")
+
+
+def main(argv: list[str] | None = None) -> None:
+    args = sys.argv[1:] if argv is None else argv
+    if len(args) < 2:
+        sys.exit("usage: python tools/replicate_sf.py "
+                 "<src_sf_dir> <dst_dir> [N=4]")
+    src, dst = args[0], args[1]
+    if os.path.abspath(src) == os.path.abspath(dst):
+        sys.exit(f"refusing to replicate {src} onto itself")
+    n = int(args[2]) if len(args) > 2 else 4
     from semlink.session import get_spark
     spark = get_spark("replicate-sf")
+    dfs = {t: spark.read.parquet(f"{src}/{t}.parquet") for t in TABLES}
+    keys = {t: [c for c in df.columns if c in OFFSETS] for t, df in dfs.items()}
+    # validate every table before the first write
+    for t, keyed in keys.items():
+        if keyed:
+            row = dfs[t].agg(*[F.max(c).alias(c) for c in keyed]).first()
+            check_offsets(t, {c: row[c] for c in keyed}, n)
     reps = spark.range(n).select(F.col("id").alias("rep"))
-    for t in TABLES:
-        df = spark.read.parquet(f"{src}/{t}.parquet")
+    for t, df in dfs.items():
         types = {f.name: f.dataType for f in df.schema.fields}
-        keyed = [c for c in df.columns if c in OFFSETS]
+        keyed = keys[t]
         out = df
         if keyed:
             out = df.crossJoin(reps)
