@@ -73,6 +73,7 @@ def _local_union_find(edges: DataFrame) -> DataFrame:
     Spark's UTF8 binary ordering for the ASCII ids this engine mints
     (module docstring). Only reachable through the size-gated fast
     path in run_connected_components."""
+    import pyarrow as pa
     from pyspark.sql.types import StructField, StructType
     spark = edges.sparkSession
     src_t = edges.schema["src"].dataType
@@ -95,11 +96,15 @@ def _local_union_find(edges: DataFrame) -> DataFrame:
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    # the smaller root wins every union, so a root is its component's min
-    out = [(n, find(n)) for n in parent]
+    # the smaller root wins every union, so a root is its component's min.
+    # Labels go to the JVM as an Arrow table (a JVM-side scan); a Python
+    # list would become a Python RDD that workers re-evaluate per action
+    nodes = list(parent)
     schema = StructType([StructField("mention_id", src_t),
                          StructField("cluster_id", src_t)])
-    return spark.createDataFrame(out, schema)
+    return spark.createDataFrame(
+        pa.table({"mention_id": nodes,
+                  "cluster_id": [find(n) for n in nodes]}), schema)
 
 
 def run_connected_components(
@@ -149,16 +154,22 @@ def run_connected_components(
     if cur is None:
         # the input cut: superstep 0 consumes its edges twice (sym →
         # groupBy + join), and an expensive upstream lineage (LSH chain,
-        # scored pair table) must not be evaluated twice (guide §5)
-        cur = edges.select("src", "dst").localCheckpoint(eager=True)
+        # scored pair table) must not be evaluated twice (guide §5).
+        # A null endpoint is no edge: the loop's joins would drop it,
+        # so it is dropped here for every path alike
+        obs = Observation("cc_input")
+        cur = (edges.select("src", "dst")
+               .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
+               .observe(obs, F.count(F.lit(1)).alias("n"))
+               .localCheckpoint(eager=True))
         # Small-graph finishing step: min-member component labels are
         # algorithm-independent, so a graph whose materialized edge set
         # is broadcast-threshold-sized gets them from a bounded driver
         # union-find instead of ~15 jobs of superstep machinery.
-        # Identity with the superstep loop is pinned by tests; the count
-        # is one action over the cut just taken.
+        # Identity with the superstep loop is pinned by tests; the row
+        # count rides the cut's own action (observe), no count job.
         cap = cfg.cc_local_fastpath_edges
-        if not durable and cap and cur.count() <= cap:
+        if not durable and cap and obs.get["n"] <= cap:
             return _local_union_find(cur)
 
     prev_fp = None

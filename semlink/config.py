@@ -31,7 +31,12 @@ class SemlinkConfig:
     skip_stopword_mentions: bool = False   # F4: drop bare-stopword keys
 
     # --- pairwise scoring (SURVEY X*, J3) ---
-    match_threshold: float = 0.5           # score above which a pair is an edge
+    # score at or above which a pair is an edge. Every same-sense pair
+    # scores at least pairs.SCORE_FLOOR (0.55, the kernel's constant
+    # term) unless its score is NaN, so any threshold in (0, 0.55] gives
+    # the same edges and they are decided without running the Python
+    # kernel; only a threshold above the floor grades pairs by score
+    match_threshold: float = 0.5
     # weight of context relatedness vs prior: score = prior·(1 + W·Σ mw_rel)
     # with mw_rel the Milne-Witten log-normalized relatedness ∈ [0,1].
     # A confident context (mw_rel→1) must beat the max prior ratio the

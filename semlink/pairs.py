@@ -14,18 +14,31 @@ Scoring runs as ONE vectorized Arrow-batched pandas UDF over the pair
 feature columns — batched Jaro-Winkler + Levenshtein (numpy kernels,
 metrics_udf) combined with the commonness×senseprob features. No
 per-row Python anywhere (north rule).
+
+When the kernel runs: every same-sense pair scores at least
+``SCORE_FLOOR`` (the formula's constant term) unless its score is NaN,
+so a match threshold in (0, SCORE_FLOOR] — the default 0.5 is one —
+decides edges from the kernel's inputs alone. ``edges_from_scores``
+then never reads ``pair_score``, Catalyst prunes the UDF, and the
+default pipeline starts no Python worker. ``score_pairs`` always
+attaches the kernel score, so a caller that reads ``pair_score`` (or a
+threshold above the floor) still runs the kernel.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (DoubleType, LongType, StructField,
                                StructType)
 
 from .config import DEFAULT, SemlinkConfig
 from .metrics_udf import jaro_winkler_batch, levenshtein_batch
+
+# the constant term of pair_score_udf: a same-sense pair's score is
+# this plus non-negative terms, or NaN (see edges_from_scores)
+SCORE_FLOOR = 0.55
 
 
 @F.pandas_udf(DoubleType())
@@ -89,7 +102,8 @@ def pair_score_udf(ngram_l: pd.Series, ngram_r: pd.Series,
                    sense_prob_r: pd.Series) -> pd.Series:
     """X8: one Arrow batch in, one score vector out.
 
-    score = 1[same resolved sense] * (0.55 + 0.25*JW + 0.10*(1 - lev/len)
+    score = 1[same resolved sense] * (SCORE_FLOOR + 0.25*JW
+            + 0.10*(1 - lev/len)
             + 0.10 * sqrt(prior_l*prior_r * senseprob-lift))
 
     The indicator dominates (an edge requires agreeing senses); the
@@ -126,7 +140,7 @@ def pair_score_udf(ngram_l: pd.Series, ngram_r: pd.Series,
     commonness = np.sqrt(
         prior_l.to_numpy() * prior_r.to_numpy()
         * np.minimum(1.0, sense_prob_l.to_numpy() + sense_prob_r.to_numpy()))
-    s = ind * (0.55 + 0.25 * jw + 0.10 * lev_sim + 0.10 * commonness)
+    s = ind * (SCORE_FLOOR + 0.25 * jw + 0.10 * lev_sim + 0.10 * commonness)
     return pd.Series(s)
 
 
@@ -206,7 +220,11 @@ def mention_pairs(resolved: DataFrame, cfg: SemlinkConfig = DEFAULT,
 
 
 def score_pairs(pairs: DataFrame, cfg: SemlinkConfig = DEFAULT) -> DataFrame:
-    """X8: attach the vectorized pair score."""
+    """X8: attach the vectorized pair score. The kernel (and its Python
+    workers) runs only when a plan reads ``pair_score``: a threshold
+    above ``SCORE_FLOOR`` in ``edges_from_scores``, or a caller that
+    materializes the scored pairs. At the default threshold the edges
+    plan prunes it."""
     return pairs.withColumn(
         "pair_score",
         pair_score_udf(
@@ -216,10 +234,37 @@ def score_pairs(pairs: DataFrame, cfg: SemlinkConfig = DEFAULT) -> DataFrame:
             F.col("sense_prob_l"), F.col("sense_prob_r")))
 
 
+def _kernel_scores_a_number() -> Column:
+    """True exactly where pair_score_udf returns a number (not NaN, which
+    reaches Spark as NULL) for a same-sense pair. Its JW and Levenshtein
+    terms are finite and in [0, 1], so that is where the commonness
+    sqrt(prior_l * prior_r * minimum(1, sense_prob_l + sense_prob_r)) is
+    not NaN. Spark's least() skips NULL and orders NaN above every
+    number, where numpy's minimum propagates both, so the sum is tested
+    explicitly; Spark also orders NaN above 0, so isnan comes before the
+    sign test."""
+    sp = F.col("sense_prob_l") + F.col("sense_prob_r")
+    c = F.col("prior_l") * F.col("prior_r") * F.least(F.lit(1.0), sp)
+    return ((F.col("target_l") == F.col("target_r"))
+            & sp.isNotNull() & ~F.isnan(sp)
+            & c.isNotNull() & ~F.isnan(c) & (c >= 0))
+
+
 def edges_from_scores(scored: DataFrame,
                       cfg: SemlinkConfig = DEFAULT) -> DataFrame:
-    """C1: thresholded, canonical-ordered, deduped undirected edges."""
-    e = scored.filter(F.col("pair_score") >= cfg.match_threshold)
+    """C1: thresholded, canonical-ordered, deduped undirected edges.
+
+    For a threshold t in (0, SCORE_FLOOR] the edge set is decided
+    without the kernel: cross-sense pairs score 0.0 or NaN (never an
+    edge), and a same-sense pair scores at least SCORE_FLOOR >= t
+    unless its score is NaN. The predicate reads only the kernel's
+    inputs, so Catalyst prunes ``pair_score`` and the plan runs no
+    Python. Any other threshold compares ``pair_score`` itself."""
+    t = cfg.match_threshold
+    if 0 < t <= SCORE_FLOOR:
+        e = scored.filter(_kernel_scores_a_number())
+    else:
+        e = scored.filter(F.col("pair_score") >= t)
     # mention_pairs emits unique unordered pairs, so no distinct here;
     # CC's per-round distinct() canonicalizes anyway
     return (e.select(

@@ -23,6 +23,8 @@ def _uf_oracle(edges):
         return x
 
     for a, b in edges:
+        if a is None or b is None:
+            continue        # a null endpoint is no edge
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
@@ -39,8 +41,10 @@ def _graphs():
         if a != b:
             rnd.append((f"r{a:03d}", f"r{b:03d}"))
     two = [("a", "b"), ("c", "d"), ("e", "f"), ("b", "c")]
+    nulls = [("a", "b"), ("b", None), (None, "c"), ("c", "d"),
+             (None, None), ("e", None)]
     return {"chain": chain, "star": star, "random": rnd, "mixed": two,
-            "empty": []}
+            "empty": [], "null_endpoint": nulls}
 
 
 # the three ways run_connected_components can compute labels: the
@@ -56,7 +60,8 @@ _PATHS = {
 @pytest.mark.parametrize("name", list(_graphs().keys()))
 def test_cc_matches_union_find(spark, tmp_path, name):
     """Every path yields the oracle's min-member labels, so the paths
-    equal each other; only the table loop writes superstep tables."""
+    equal each other; only the table loop writes superstep tables, and
+    the fast path's labels are a JVM-side scan (no Python RDD)."""
     edges = _graphs()[name]
     df = spark.createDataFrame(edges, "src string, dst string")
     want = _uf_oracle(edges)
@@ -66,6 +71,9 @@ def test_cc_matches_union_find(spark, tmp_path, name):
         got = {r.mention_id: r.cluster_id for r in labels.collect()}
         assert got == want, path
         assert ckpt.is_dir() == (path == "table"), path
+        if path == "fastpath":
+            lineage = labels._jdf.queryExecution().toRdd().toDebugString()
+            assert "PythonRDD" not in lineage, lineage
 
 
 def test_cc_resume_identical(spark, tmp_path):

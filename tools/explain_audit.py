@@ -7,7 +7,8 @@ the properties the 100 TB design depends on:
 - the dictionary join is a BroadcastHashJoin;
 - predicate pushdown reaches the scan (PushedFilters);
 - hot paths run inside WholeStageCodegen;
-- the pair scorer is an ArrowEvalPython (vectorized), never BatchEvalPython.
+- the pair scorer is an ArrowEvalPython (vectorized), never BatchEvalPython;
+- the default-config pipeline edges plan runs no Python at all.
 
 Writes PLANS.md with the formatted plans + the audit verdicts.
 """
@@ -37,7 +38,7 @@ def main():
     from semlink.fixtures import generate, to_spark
     from semlink.linking import (candidate_join, generate_mentions,
                                  largest_matching_filter)
-    from semlink.pairs import mention_pairs, score_pairs
+    from semlink.pairs import edges_from_scores, mention_pairs, score_pairs
 
     sf = "/root/testdata/sf0.001"
     fx = to_spark(spark, generate("tiny"))
@@ -89,6 +90,14 @@ def main():
     checks.append(("scorer is ArrowEvalPython", "ArrowEvalPython" in p4))
     checks.append(("no row-wise BatchEvalPython anywhere",
                    "BatchEvalPython" not in p4))
+
+    # 5. the default pipeline's edges never read pair_score (the match
+    #    threshold is below the score floor), so Catalyst prunes the
+    #    kernel and the whole link → score → edge plan stays in the JVM
+    p5 = formatted(edges_from_scores(scored))
+    sections["pipeline edges at default config (C1)"] = p5
+    checks.append(("default-config pipeline edges plan has no EvalPython",
+                   "EvalPython" not in p5))
 
     # 6. relatedness self-join is capped + aggregated with partial aggs
     from semlink.linking import relatedness_table
