@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from .config import DEFAULT, SemlinkConfig
 from .io import TableIO
+from .ops import cut
 
 
 def _sym(edges: DataFrame) -> DataFrame:
@@ -130,7 +131,7 @@ def run_connected_components(
     durable = (resume or stop_after_step is not None
                or cfg.cc_checkpoint == "table")
 
-    def cut(df: DataFrame, name: str) -> DataFrame:
+    def commit(df: DataFrame, name: str) -> DataFrame:
         if durable:
             return io.checkpoint(df, name)
         return df.localCheckpoint(eager=True)
@@ -157,19 +158,18 @@ def run_connected_components(
         # scored pair table) must not be evaluated twice (guide §5).
         # A null endpoint is no edge: the loop's joins would drop it,
         # so it is dropped here for every path alike
-        obs = Observation("cc_input")
-        cur = (edges.select("src", "dst")
-               .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-               .observe(obs, F.count(F.lit(1)).alias("n"))
-               .localCheckpoint(eager=True))
+        cur, seen = cut(
+            edges.select("src", "dst")
+            .filter(F.col("src").isNotNull() & F.col("dst").isNotNull()),
+            "cc_input")
         # Small-graph finishing step: min-member component labels are
         # algorithm-independent, so a graph whose materialized edge set
         # is broadcast-threshold-sized gets them from a bounded driver
         # union-find instead of ~15 jobs of superstep machinery.
         # Identity with the superstep loop is pinned by tests; the row
-        # count rides the cut's own action (observe), no count job.
+        # count rides the cut's own action (ops.cut), no count job.
         cap = cfg.cc_local_fastpath_edges
-        if not durable and cap and obs.get["n"] <= cap:
+        if not durable and cap and seen["rows"] <= cap:
             return _local_union_find(cur)
 
     prev_fp = None
@@ -183,7 +183,7 @@ def run_connected_components(
             obs,
             F.count(F.lit(1)).alias("n"),
             F.coalesce(F.expr("bit_xor(xxhash64(src, dst))"), F.lit(0)).alias("h"))
-        cur = cut(stepped, f"edges_step_{i}")  # atomic commit / lineage cut
+        cur = commit(stepped, f"edges_step_{i}")  # atomic commit / lineage cut
         ls.unpersist()
         fp = (obs.get["n"], obs.get["h"])
         if fp == prev_fp:

@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
+from .ops import cut
+
 # fixed feature order for the X7 assembly (documented contract)
 FEATURE_COLS = [
     "prior_prob", "link_prob", "sense_prob",
@@ -164,16 +166,12 @@ def fit_boosted_stumps(feats: DataFrame, feature_cols: list[str],
         d = d.withColumn("w9", F.round(F.col("w9") * up).cast("bigint"))
         # deterministic renormalization to ~1e9 per row (exact integer
         # total; per-row double multiply is order-independent). The
-        # total rides the checkpoint materialization as an Observation
-        # — the CC convergence-probe pattern — so each round is TWO
-        # actions (stump errors + checkpoint), not three; the renorm
-        # itself stays a lazy column over the checkpointed raw weights
-        # with the identical (n, t9) arithmetic (round-6).
-        from pyspark.sql import Observation
-        obs = Observation(f"stump_t9_{rnd}_{id(d)}")
-        d = d.observe(obs, F.sum("w9").alias("t9")) \
-             .localCheckpoint(eager=True)
-        t9 = obs.get["t9"]
+        # total rides the checkpoint materialization (ops.cut), so each
+        # round is TWO actions (stump errors + checkpoint), not three;
+        # the renorm itself stays a lazy column over the checkpointed
+        # raw weights with the identical (n, t9) arithmetic (round-6).
+        d, seen = cut(d, f"stump_t9_{rnd}_{id(d)}", F.sum("w9").alias("t9"))
+        t9 = seen["t9"]
         d = d.withColumn(
             "w9",
             F.greatest(F.lit(1), F.round(

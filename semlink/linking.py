@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from .config import DEFAULT, SemlinkConfig
 from .ngrams import explode_mentions, explode_mentions_hof
+from .ops import cut
 from .textnorm import clean_expr
 
 
@@ -338,7 +339,7 @@ def relatedness_table(page_links: DataFrame, entities: DataFrame,
         # ``materialize=False`` skips the cut — plan-audit only (the
         # checkpoint truncates lineage to a LogicalRDD, hiding the
         # LeftSemi entity reduction the audit asserts on)
-        il = il.localCheckpoint(eager=True)
+        il, _ = cut(il, "inlinks")
     sizes = il.groupBy("e").agg(F.count(F.lit(1)).alias("n_in"))
     # N stays lazy: a 1-row aggregate cross-joined in (no driver action)
     n_df = page_links.select(
@@ -457,10 +458,6 @@ def link_transcripts(transcripts: DataFrame, anchors: DataFrame,
     target_id, target_title, probabilities, score)."""
     mentions = generate_mentions(transcripts, cfg,
                                  first_words=anchor_first_words(anchors))
-    # persist the (small) post-blocking candidate set: the explode above
-    # multiplies the corpus ~100× and F3 + sense resolution reference
-    # the candidates in 4 subplans — without the persist, Spark
-    # re-executes the full explode for each (measured 5× link-stage cost)
     if cfg.broadcast_dictionary:
         cands = candidate_join(mentions, anchors, cfg)
     else:
@@ -471,7 +468,12 @@ def link_transcripts(transcripts: DataFrame, anchors: DataFrame,
                .filter(F.col("c") >= cfg.hot_key_min_count)
                .select(F.col("ngram_norm").alias("anchor_norm")))
         cands = salted_candidate_join(mentions, anchors, hot, cfg)
-    cands = cands.persist()
+    # cut the (small) post-blocking candidate set: the explode above
+    # multiplies the corpus ~100× and F3 + sense resolution reference
+    # the candidates in 4 subplans — without a cut, Spark re-executes
+    # the full explode for each (measured 5× link-stage cost). The cut
+    # runs here, at call time, and leaves nothing in the CacheManager
+    cands, _ = cut(cands, "cands")
     if cfg.largest_matching_only:
         cands = largest_matching_filter(cands)
     cands = threshold_filter(cands, cfg)

@@ -1,10 +1,14 @@
-"""Operational surfaces: per-stage metrics + per-partition lineage
-(SURVEY O1-O2; north rule "per-partition lineage and metrics tables").
+"""Operational surfaces: the lineage cut, per-stage metrics and
+per-partition lineage (SURVEY O1-O2; north rule "per-partition lineage
+and metrics tables").
 
-MetricsCollector gathers driver-side scalars (wall time per stage, row
-counts) cheaply — small aggregations only, never a collect of data
-rows. Lineage snapshots record rows-per-partition and source files per
-stage so a superstep can be audited after the fact.
+:func:`cut` is the one way the engine truncates lineage: an eager
+``localCheckpoint`` whose row count (and any extra aggregate) rides the
+same action as an ``Observation``. MetricsCollector gathers driver-side
+scalars (wall time per stage, row counts) cheaply — small aggregations
+only, never a collect of data rows. Lineage snapshots record
+rows-per-partition and source files per stage so a superstep can be
+audited after the fact.
 """
 
 from __future__ import annotations
@@ -12,10 +16,28 @@ from __future__ import annotations
 import time
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .io import TableIO
+
+
+def cut(df: DataFrame, name: str, *aggs: Column) -> tuple[DataFrame, dict]:
+    """Materialize ``df`` with an eager ``localCheckpoint`` and return
+    ``(cut_df, seen)``: ``seen["rows"]`` is its row count and each
+    extra aggregate in ``aggs`` appears under its alias. The counts ride
+    the checkpoint's own action, so no separate count job runs.
+
+    Every later query over ``cut_df`` plans a ``LogicalRDD`` leaf
+    instead of the whole upstream tree, and nothing enters Spark's
+    CacheManager. The blocks live on the executors that computed them:
+    a lost executor fails the query that reads them rather than
+    recomputing (local checkpoints keep no lineage). Durable, resumable
+    commits are the CC superstep tables (``cluster.py``)."""
+    obs = Observation(name)
+    out = (df.observe(obs, F.count(F.lit(1)).alias("rows"), *aggs)
+           .localCheckpoint(eager=True))
+    return out, obs.get
 
 
 class MetricsCollector:
@@ -33,7 +55,11 @@ class MetricsCollector:
         self._stage_rows.append((self.run_id, name, time.time() - t0))
 
     def rows(self, name: str, df: DataFrame) -> int:
-        n = df.count()
+        """Count ``df`` (one job) and record it as ``name``."""
+        return self.record(name, df.count())
+
+    def record(self, name: str, n: int) -> int:
+        """Record an already-known row count, e.g. one :func:`cut` saw."""
         self._count_rows.append((self.run_id, name, n))
         return n
 

@@ -3,11 +3,19 @@
 
     spark-submit --py-files semlink.zip -m semlink.pipeline \
         --transcripts <path|iceberg table> --anchors <...> \
-        --page-links <...> --out <dir> [--step link|score|cluster|eval]
+        --page-links <...> --out <dir> [--labeled-pairs <...>] \
+        [--fmt parquet|iceberg] [--ckpt <dir>]
 
-Stages are individually resumable through named checkpoint tables
-(mentions → resolved → edges → labels); the clustering superstep loop
-additionally checkpoints every iteration (cluster.py).
+One call runs every layer: link → score → cluster (→ eval). The layer
+outputs (candidates, resolved mentions, edges, CC input, assignments)
+are local cuts (``ops.cut``: eager ``localCheckpoint``, row count on an
+``Observation``), so each later query plans a small ``LogicalRDD`` tree
+and nothing stays in Spark's CacheManager. A local cut keeps no
+lineage: a lost executor fails the op loudly instead of recomputing,
+and the caller reruns it.
+The only durable, resumable commits are the CC supersteps
+(``edges_step_<i>``, cluster.py) under ``cc_checkpoint="table"`` or
+``run_connected_components(resume=True)``.
 """
 
 from __future__ import annotations
@@ -23,7 +31,7 @@ from .cluster import cluster_assignments, pairwise_f1, run_connected_components
 from .config import DEFAULT, SemlinkConfig
 from .io import TableIO
 from .linking import link_transcripts
-from .ops import MetricsCollector
+from .ops import MetricsCollector, cut
 from .pairs import edges_from_scores, mention_pairs, score_pairs
 
 
@@ -54,22 +62,30 @@ def run_pipeline(
         transcripts = transcripts.repartition(
             cfg.shuffle_partitions, "conv_id", "turn_idx")
 
+    # each layer's output is cut (module docstring); its row count
+    # rides the cut's own action
     with mc.stage("link"):
-        resolved = link_transcripts(transcripts, anchors, page_links, cfg)
-        resolved = resolved.persist()
-        mc.rows("resolved_mentions", resolved)
+        resolved, seen = cut(
+            link_transcripts(transcripts, anchors, page_links, cfg),
+            "resolved")
+        mc.record("resolved_mentions", seen["rows"])
 
     with mc.stage("score"):
         pairs = mention_pairs(resolved, cfg)
         scored = score_pairs(pairs, cfg)
-        edges = edges_from_scores(scored, cfg).persist()
-        mc.rows("edges", edges)
+        edges, seen = cut(edges_from_scores(scored, cfg), "edges")
+        mc.record("edges", seen["rows"])
 
     with mc.stage("cluster"):
         labels = run_connected_components(
             edges, cfg, ckpt_dir=ckpt_dir or cfg.checkpoint_dir)
-        assignments = cluster_assignments(resolved, labels).persist()
-        mc.rows("clusters", assignments.select("cluster_id").distinct())
+        # a label is its component's min member, itself a mention that
+        # labels itself: one such row per cluster
+        assignments, seen = cut(
+            cluster_assignments(resolved, labels), "assignments",
+            F.count_if(F.col("cluster_id") == F.col("mention_id"))
+            .alias("clusters"))
+        mc.record("clusters", seen["clusters"])
 
     out = {"resolved": resolved, "edges": edges, "assignments": assignments,
            "metrics": mc}

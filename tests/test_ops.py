@@ -1,5 +1,7 @@
 """O1/O2: metrics + lineage surfaces."""
-from semlink.ops import MetricsCollector
+from pyspark.sql import functions as F
+
+from semlink.ops import MetricsCollector, cut
 
 
 def test_metrics_collector(spark):
@@ -28,3 +30,16 @@ def test_metrics_roundtrip(spark, tmp_path):
     mc.write(io)
     back = io.read(spark, "metrics_stages")
     assert back.count() == 1
+
+
+def test_cut_observes_rows_and_aggregates(spark):
+    df = spark.range(100).withColumn("even", F.col("id") % 2 == 0).cache()
+    out, seen = cut(df.filter(F.col("id") >= 10), "t",
+                    F.count_if("even").alias("evens"),
+                    F.max("id").alias("top"))
+    df.unpersist()
+    assert seen == {"rows": 90, "evens": 45, "top": 99}
+    assert out.count() == 90
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.startswith("LogicalRDD")
+    assert "InMemoryRelation" not in plan

@@ -2,7 +2,8 @@
 - pairwise F1 ≥ 0.99 (north rule headline);
 - predicted clusters == expected clusters exactly;
 - per-turn text equality under stable (conv_id, turn_idx) ordering;
-- determinism across two runs.
+- determinism across two runs;
+- the layer outputs are cut, not cached, and their counts ride the cuts.
 """
 import pytest
 from pyspark.sql import functions as F
@@ -67,3 +68,27 @@ def test_determinism_two_runs(spark, fx_tiny_dfs, tmp_path):
     a1 = sorted(map(tuple, r1["assignments"].collect()))
     a2 = sorted(map(tuple, r2["assignments"].collect()))
     assert a1 == a2
+
+
+def test_metrics_ride_the_cuts(result):
+    """The counts come from the cuts' Observations, not count jobs; the
+    cluster count is the number of self-labelled mentions."""
+    got = {name: n for _run, name, n in result["metrics"]._count_rows}
+    assert got == {
+        "resolved_mentions": result["resolved"].count(),
+        "edges": result["edges"].count(),
+        "clusters": result["assignments"].select("cluster_id")
+        .distinct().count()}
+
+
+def test_run_pipeline_leaves_cache_empty(spark, fx_tiny, tmp_path):
+    """Nothing run_pipeline builds stays in the CacheManager (inputs
+    here are uncached, unlike the shared fixture's)."""
+    from semlink.fixtures import to_spark
+    d = to_spark(spark, fx_tiny)
+    spark.catalog.clearCache()
+    res = run_pipeline(d["transcripts"], d["anchors"], d["page_links"],
+                       ckpt_dir=str(tmp_path / "ckpt"),
+                       labeled_pairs=d["labeled_pairs"])
+    assert res["f1"]["f1"] >= 0.99
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

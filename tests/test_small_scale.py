@@ -33,3 +33,13 @@ def test_small_resolution_accuracy(spark, small_result):
     bad = j.filter(F.col("r.target_id") != F.col("g.true_entity")).count()
     assert n == len(fx.mentions_gt)
     assert bad / n <= 0.005, f"{bad}/{n} misresolved"
+
+
+def test_small_metrics_ride_the_cuts(small_result):
+    _fx, _d, res = small_result
+    got = {name: n for _run, name, n in res["metrics"]._count_rows}
+    assert got == {
+        "resolved_mentions": res["resolved"].count(),
+        "edges": res["edges"].count(),
+        "clusters": res["assignments"].select("cluster_id")
+        .distinct().count()}

@@ -8,7 +8,8 @@ the properties the 100 TB design depends on:
 - predicate pushdown reaches the scan (PushedFilters);
 - hot paths run inside WholeStageCodegen;
 - the pair scorer is an ArrowEvalPython (vectorized), never BatchEvalPython;
-- the default-config pipeline edges plan runs no Python at all.
+- the default-config pipeline edges plan runs no Python at all;
+- the pipeline's layer outputs are cut, not cached.
 
 Writes PLANS.md with the formatted plans + the audit verdicts.
 """
@@ -17,6 +18,7 @@ from __future__ import annotations
 import io
 import os
 import sys
+import tempfile
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -98,6 +100,19 @@ def main():
     sections["pipeline edges at default config (C1)"] = p5
     checks.append(("default-config pipeline edges plan has no EvalPython",
                    "EvalPython" not in p5))
+
+    # 5b. run_pipeline cuts its layer outputs (ops.cut): a later query
+    #     over the edges plans a LogicalRDD leaf, not the cached
+    #     (InMemoryRelation) link → score tree
+    from semlink.pipeline import run_pipeline
+    res = run_pipeline(t, anchors, fx["page_links"],
+                       ckpt_dir=tempfile.mkdtemp(prefix="semlink_audit_cc_"))
+    lp5b = res["edges"]._jdf.queryExecution().optimizedPlan().toString()
+    sections["pipeline edges after the cut (C1)"] = lp5b
+    checks.append(("pipeline layer outputs are cut: the edges plan has no "
+                   "InMemoryRelation and starts at a LogicalRDD",
+                   "InMemoryRelation" not in lp5b
+                   and lp5b.startswith("LogicalRDD")))
 
     # 6. relatedness self-join is capped + aggregated with partial aggs
     from semlink.linking import relatedness_table
