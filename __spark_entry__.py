@@ -6,7 +6,7 @@ queries()      — one entry per implemented operator (SURVEY.md §2 +
 oracle_sql()   — DuckDB-equivalent SQL per query (omitted only for the
                  genuinely non-SQL-expressible ones → rows-only check).
 
-The registry itself lives in semlink/queries.py; fixture-pipeline
+The registry itself lives in the semlink/queries/ package; fixture-pipeline
 queries (the real transcript record-linkage path) are defined here
 because their "oracle" is a constant golden table derived from the
 deterministic fixture generator.
@@ -75,68 +75,29 @@ def _load_golden_sql() -> dict[str, str]:
 # The driver's correctness pass has a finite entry window (r03 recorded
 # exactly 50 of 53), so ordering is part of the contract: the
 # load-bearing entries — the end-to-end fixture pipeline, the pairwise-
-# F1>=0.99 north-star gate, and decontamination — are registered FIRST;
-# the four generic-SQL demos (they exercise Spark, not this engine) are
-# demoted out of the driver contract entirely (still importable and
-# benchable from semlink.queries); and the rows-only entries (no
-# ANSI-SQL oracle by design — the weakest evidence class, all four
-# independently pinned by pytest) are ordered LAST so that if the
-# window truncates, it truncates exactly them.
+# F1>=0.99 north-star gate, and decontamination — are registered FIRST,
+# and the rows-only entries (no ANSI-SQL oracle by design — the weakest
+# evidence class, all four independently pinned by pytest) are ordered
+# LAST so that if the window truncates, it truncates exactly them.
 _PRIORITY = ["pipeline_fixture_clusters", "pipeline_fixture_f1",
              "dedup_decontaminate", "dedup_near_dup_clusters",
              "rl_link_top1", "rl_connected_components"]
-# Demoted from the driver contract (still registered / benchable):
-# the four generic-SQL demos exercise Spark, not this engine; the
-# second group was consolidated into combined entries (rl_string_sims,
-# rl_dict_stats, rl_textnorm, rl_page_graph, ml_logistic_features,
-# text_token_quality, stream_link_sessions, rl_filter_battery) so the
-# driver's 50-entry recording window covers every distinct operator
-# family (VERDICT r04 next #7) with room for the linkeval pair.
-# dedup_minhash_signatures / dedup_lsh_buckets are demoted on the
-# transitive-pinning argument: the hash-gated LSH consumer is
-# generated FROM the bucket table, which is generated FROM the
-# signature table, so any bit change in either upstream stage changes
-# the still-hash-gated downstream (and the dedup_near_dup_clusters
-# composition) — every dedup stage stays oracle-verified through its
-# consumer. Round 5 (second half): dedup_lsh_pairs +
-# dedup_ngram_jaccard consolidate into dedup_lsh_jaccard (the verify
-# runs ON the LSH pairs) and ml_stumps_apply merges into
-# ml_logistic_features (same p_partkey key), freeing two window slots
-# for the rl_meta_blocking and dedup_setsim_join entries.
-# rl_salted_join is demoted for the rl_merge_rematch slot: its oracle
-# proved salted == plain at sf0.01, which pytest
-# (test_salted_link_equals_broadcast_link) already pins as exact
-# multiset equality on a planted-skew fixture — a strictly harder
-# input — while the plain join itself stays hash-gated through
-# rl_link_top1 and the pipeline goldens.
-_DEMOTED = {"dedup_minhash_signatures", "dedup_lsh_buckets",
-            "rl_salted_join", "rl_cluster_review", "rl_incremental_link",
-            "rl_one_to_one_greedy", "rl_pprl_bloom", "rl_fs_frequency",
-            "rl_soft_tfidf", "rl_score_auc", "rl_fs_thresholds",
+# Registered but outside the driver contract. An entry stays here only
+# while something reads it by name: bench.py, tools/*.py, perfbench/*.py
+# or a tests/*.py file (tests/test_contract.py enforces this). An entry
+# nothing reads is deleted, not demoted.
+_DEMOTED = {"dedup_minhash_signatures", "rl_cluster_review",
+            "rl_incremental_link", "rl_one_to_one_greedy", "rl_pprl_bloom",
+            "rl_fs_frequency", "rl_soft_tfidf", "rl_fs_thresholds",
             "dedup_canopy", "rl_group_linkage", "dedup_center_clusters",
-            "rl_temporal_decay", "stream_incremental_link",
-            "dedup_merge_center", "dedup_containment",
+            "rl_temporal_decay", "dedup_merge_center", "dedup_containment",
             "text_lm_perplexity", "sample_token_budget",
             "rl_pagerank_prior", "text_novelty", "media_video_frames",
-            "media_ahash_dedup", "rl_affine_gap",
-            "dedup_cluster_stability", "dedup_weighted_jaccard",
-            "ops_corpus_report", "media_ahash_near_pairs",
+            "media_ahash_dedup", "rl_affine_gap", "media_ahash_near_pairs",
             "dedup_verdict", "text_lang_mix", "rl_phonetic_blocking",
             "rl_qgram_blocking", "rl_gap_sessions", "ann_pq_codes",
-            "ann_pq_adc_topk", "ann_ivfpq_codes",
-            "dedup_lsh_pairs", "dedup_ngram_jaccard",
-            "agg_pricing_summary", "join_topk_customers",
-            "window_last_event", "rollup_event_counts",
-            "rl_levenshtein", "rl_jaro_winkler",
-            "rl_threshold_filter", "rl_unique_filter",
-            "rl_stopword_filter",
-            "rl_dict_build", "rl_dict_probabilities",
-            "rl_clean_text", "rl_normalize_blocking_key",
-            "rl_page_degree", "rl_page_features",
-            "ml_feature_assembly", "ml_logistic_apply",
-            "ml_stumps_apply",
-            "text_token_stats", "text_quality_score",
-            "stream_candidates_availablenow", "stream_session_windows"}
+            "ann_pq_adc_topk", "ann_ivfpq_codes", "dedup_lsh_pairs",
+            "text_quality_score"}
 # Rows-only ordering: the composed streaming witness first so it lands
 # inside the window, then lineage; the two stateful streaming entries
 # (pytest-pinned) absorb any truncation.

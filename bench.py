@@ -51,7 +51,6 @@ HEADLINE = [
     "rl_fellegi_sunter", "rl_blocking_quality",
     "rl_cluster_metrics", "rl_golden_record",
     "rl_meta_blocking", "dedup_setsim_join", "rl_cluster_review",
-    "agg_pricing_summary",
     "rl_pprl_bloom", "rl_soft_tfidf",
     "dedup_containment", "text_lm_perplexity", "sample_token_budget",
     "rl_pagerank_prior", "text_novelty", "media_video_frames",
@@ -93,9 +92,6 @@ NEW_QUERIES = ["text_repetition", "text_heuristic_filters",
                "rl_phonetic_blocking", "rl_qgram_blocking",
                "rl_gap_sessions", "ann_pq_codes", "ann_pq_adc_topk",
                "ann_ivfpq_codes"]
-# dedup_cluster_stability is NOT benched: it is two runs of the same
-# checkpointed CC dedup_near_dup_clusters already times (~2x its
-# wall), pure redundancy per draw
 
 
 def ensure_bench_fixture(spark) -> str:

@@ -21,6 +21,7 @@ committed step; a killed run produces byte-identical clusters (tested).
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 
@@ -149,8 +150,13 @@ def run_connected_components(
                     f"checkpoint {ckpt!r} holds {cur.dtypes}, not the input "
                     "edges' types: another layout wrote it; rerun without "
                     "resume")
-    elif durable and os.path.isdir(ckpt) and io.fmt == "parquet":
-        shutil.rmtree(ckpt, ignore_errors=True)
+    elif durable and io.fmt == "parquet":
+        # a fresh run drops the steps an earlier run committed (a later
+        # resume would read a stale higher step), and only those: the
+        # rest of the directory is the caller's
+        for old in glob.glob(os.path.join(glob.escape(ckpt),
+                                          "edges_step_*.parquet")):
+            shutil.rmtree(old, ignore_errors=True)
 
     if cur is None:
         # the input cut: superstep 0 consumes its edges twice (sym →

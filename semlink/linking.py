@@ -196,8 +196,8 @@ def salted_candidate_join(mentions: DataFrame, anchors: DataFrame,
     :func:`candidate_join`. Measured guidance (BENCH/BASELINE.md §4b):
     AQE's runtime skew-join split beat this manual salt (2.8 s vs
     6.4 s at 8M skewed rows), so prefer broadcast, then AQE; the salt
-    is for engines with AQE off. It is oracle-verified identical to
-    the plain join (rl_salted_join).
+    is for engines with AQE off. pytest pins it identical to the plain
+    join (``test_salted_join_equals_plain_join``).
 
     ``hot_keys`` is a small DataFrame(anchor_norm) of surface forms whose
     probe-side frequency exceeds cfg.hot_key_min_count (computed from O2

@@ -102,11 +102,8 @@ from . import media     # noqa: E402,F401  multimodal plumbing
 from . import rlcov     # noqa: E402,F401  record-linkage coverage tail
 from . import linkeval  # noqa: E402,F401  FS weights + blocking quality
 from . import mlops     # noqa: E402,F401  ML + ops queries
-# streamq MUST import after linkeval: its stream_incremental_link
-# oracle is resolved from REGISTRY['rl_incremental_link'] at import
 from . import streamq   # noqa: E402,F401  streaming queries
 from . import sampling  # noqa: E402,F401  stratified sampling
-from . import generic   # noqa: E402,F401  generic SQL (demoted from driver)
 
 # Re-export every registered callable under its function name so
 # `from semlink.queries import rl_link_top1` keeps working.

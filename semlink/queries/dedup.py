@@ -48,12 +48,6 @@ _BUCKET_SQL = " UNION ALL ".join(
         FROM ({_MINHASH_SQL})"""
     for b in range(dd.LSH_BANDS))
 
-@q("dedup_lsh_buckets", _BUCKET_SQL)
-def dedup_lsh_buckets(spark, sf_dir):
-    sigs = dd.minhash_signatures(_docs(spark, sf_dir))
-    return dd.lsh_buckets(sigs).withColumn("band", F.col("band").cast("int"))
-
-
 @q("dedup_lsh_pairs", f"""
   WITH b AS ({_BUCKET_SQL}),
   sized AS (SELECT band, bucket FROM b GROUP BY band, bucket
@@ -68,50 +62,11 @@ def dedup_lsh_pairs(spark, sf_dir):
     return dd.lsh_candidate_pairs(dd.lsh_buckets(sigs))
 
 
-@q("dedup_ngram_jaccard", f"""
-  WITH pairs AS (
-    SELECT a.doc_id AS left_id, b.doc_id AS right_id
-    FROM documents a JOIN documents b
-      ON b.doc_id = a.doc_id + 1 AND a.lang = b.lang),
-  sh AS ({_SHINGLE_SQL}),
-  sizes AS (SELECT doc_id, len(sh) AS n_sh FROM sh),
-  ex AS (SELECT doc_id, unnest(sh) AS s FROM sh),
-  inter AS (SELECT p.left_id, p.right_id, count(*) AS inter
-            FROM pairs p
-            JOIN ex el ON el.doc_id = p.left_id
-            JOIN ex er ON er.doc_id = p.right_id AND er.s = el.s
-            GROUP BY 1, 2)
-  SELECT p.left_id, p.right_id,
-         coalesce(i.inter, 0) AS inter,
-         CAST(ROUND(CAST(coalesce(i.inter, 0) AS DOUBLE)
-              / (sl.n_sh + sr.n_sh - coalesce(i.inter, 0)) * {SCALE})
-              AS BIGINT) AS jaccard6
-  FROM pairs p
-  LEFT JOIN inter i USING (left_id, right_id)
-  JOIN sizes sl ON sl.doc_id = p.left_id
-  JOIN sizes sr ON sr.doc_id = p.right_id
-""")
-def dedup_ngram_jaccard(spark, sf_dir):
-    d = _docs(spark, sf_dir)
-    a = d.select(F.col("doc_id").alias("left_id"), "lang")
-    b = d.select(F.col("doc_id").alias("right_id"),
-                 F.col("lang").alias("l2"))
-    pairs = (a.join(b, (F.col("right_id") == F.col("left_id") + 1)
-                    & (F.col("lang") == F.col("l2")))
-             .select("left_id", "right_id"))
-    jac = dd.ngram_jaccard(d, pairs)
-    return jac.select(
-        "left_id", "right_id", F.col("inter").cast("bigint").alias("inter"),
-        _r6(F.col("inter").cast("double")
-            / (F.col("n_l") + F.col("n_r") - F.col("inter"))).alias("jaccard6"))
-
-
-# ---------------------------------------------------- consolidated
-# (window-budget consolidation — see queries/rl.py note.) The exact
-# Jaccard verify runs ON the LSH candidate pairs, so one hash-gated
-# entry pins the whole minhash → bucket → capped pair join → verify
-# chain (each upstream stage changes the hash) while freeing the two
-# single-purpose slots for the new linkage operators.
+# ---------------------------------------------------- combined
+# (window budget — see queries/rl.py note.) The exact Jaccard verify
+# runs ON the LSH candidate pairs, so one hash-gated entry pins the
+# whole minhash → bucket → capped pair join → verify chain (each
+# upstream stage changes the hash).
 
 @q("dedup_lsh_jaccard", f"""
   WITH b AS ({_BUCKET_SQL}),
@@ -142,8 +97,7 @@ def dedup_ngram_jaccard(spark, sf_dir):
 """)
 def dedup_lsh_jaccard(spark, sf_dir):
     """LSH candidate generation + exact shingle-Jaccard verify in one
-    hash-gated entry (consolidates dedup_lsh_pairs +
-    dedup_ngram_jaccard; both remain registered for bench)."""
+    hash-gated entry."""
     d = _docs(spark, sf_dir)
     sigs = dd.minhash_signatures(d)
     pairs = dd.lsh_candidate_pairs(dd.lsh_buckets(sigs))
@@ -656,144 +610,6 @@ def dedup_containment(spark, sf_dir):
                           F.concat_ws(" ", "toks").alias("text"))
               .unionByName(snippets))
     return containment_dedup(corpus)
-
-
-_STAB_LOOSE = _CANOPY_T1   # >= 4 shared shingles: loose graph
-_STAB_STRICT = _CANOPY_T2  # >= 20 shared shingles: strict graph
-
-
-@q("dedup_cluster_stability", f"""
-  WITH RECURSIVE {_SHSIMS_SQL},
-  le AS (SELECT 'd' || lpad(CAST(id_l AS VARCHAR), 6, '0') AS src,
-                'd' || lpad(CAST(id_r AS VARCHAR), 6, '0') AS dst
-         FROM sims WHERE sim >= {_STAB_LOOSE}),
-  lsym AS (SELECT src, dst FROM le UNION SELECT dst, src FROM le
-           UNION SELECT src, src FROM le UNION SELECT dst, dst FROM le),
-  lreach(a, b) AS (
-    SELECT src, dst FROM lsym
-    UNION
-    SELECT r.a, s.dst FROM lreach r JOIN lsym s ON r.b = s.src),
-  lcl AS (SELECT a AS id, min(b) AS loose_cluster FROM lreach GROUP BY a),
-  se AS (SELECT 'd' || lpad(CAST(id_l AS VARCHAR), 6, '0') AS src,
-                'd' || lpad(CAST(id_r AS VARCHAR), 6, '0') AS dst
-         FROM sims WHERE sim >= {_STAB_STRICT}),
-  ssym AS (SELECT src, dst FROM se UNION SELECT dst, src FROM se
-           UNION SELECT src, src FROM se UNION SELECT dst, dst FROM se),
-  sreach(a, b) AS (
-    SELECT src, dst FROM ssym
-    UNION
-    SELECT r.a, s.dst FROM sreach r JOIN ssym s ON r.b = s.src),
-  scl AS (SELECT a AS id, min(b) AS strict_cluster FROM sreach GROUP BY a)
-  SELECT l.loose_cluster, CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(count(DISTINCT coalesce(s.strict_cluster, l.id)) AS BIGINT)
-           AS n_strict,
-         count(DISTINCT coalesce(s.strict_cluster, l.id)) > 1
-           AS is_overmerge
-  FROM lcl l LEFT JOIN scl s ON l.id = s.id
-  GROUP BY l.loose_cluster
-""")
-def dedup_cluster_stability(spark, sf_dir):
-    """Threshold-sweep cluster stability — the over-merge diagnostic:
-    the shingle-sim graph is CC-clustered at a loose AND a strict
-    threshold, and each loose cluster reports how many strict
-    sub-clusters it fissions into (n_strict > 1 = docs glued only by
-    weak/chained evidence — exactly what a curation pass reviews
-    before deleting "duplicates"). Both clusterings run through the
-    SAME checkpointed large/small-star CC; docs absent from the
-    strict graph stay their own strict singleton. The oracle
-    recomputes both transitive closures as recursive CTEs and must
-    match per-cluster counts exactly. Registry + pytest + oracle
-    verified on demand; demoted from the driver window (see
-    __spark_entry__)."""
-    import tempfile
-    from ..cluster import run_connected_components
-    from ..config import SemlinkConfig
-    _docs_df, sims = _sh_sims(spark, sf_dir)
-    ident = lambda c: F.concat(F.lit("d"),
-                               F.lpad(F.col(c).cast("string"), 6, "0"))
-
-    def cc(thr, tag):
-        edges = (sims.filter(F.col("sim") >= thr)
-                 .select(ident("id_l").alias("src"),
-                         ident("id_r").alias("dst")))
-        return run_connected_components(
-            edges, SemlinkConfig(),
-            ckpt_dir=tempfile.mkdtemp(prefix=f"semlink_stab_{tag}_"))
-
-    loose = cc(_STAB_LOOSE, "l").select(
-        F.col("mention_id").alias("id"),
-        F.col("cluster_id").alias("loose_cluster"))
-    strict = cc(_STAB_STRICT, "s").select(
-        F.col("mention_id").alias("id"),
-        F.col("cluster_id").alias("strict_cluster"))
-    j = (loose.join(strict, "id", "left")
-         .withColumn("strict_cluster",
-                     F.coalesce("strict_cluster", "id")))
-    return (j.groupBy("loose_cluster")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-                 F.countDistinct("strict_cluster").cast("bigint")
-                 .alias("n_strict"),
-                 (F.countDistinct("strict_cluster") > 1)
-                 .alias("is_overmerge")))
-
-
-_SHINGLE_ALL_SQL = """
-  SELECT doc_id, unnest(
-           CASE WHEN len(toks) >= 3 THEN
-             list_transform(generate_series(1, len(toks) - 2),
-                            i -> array_to_string(toks[i : i + 2], ' '))
-           ELSE [array_to_string(toks, ' ')] END) AS s
-  FROM (SELECT doc_id, list_filter(string_split_regex(trim(coalesce(text,
-                                    '')), ' +'), x -> x <> '') AS toks
-        FROM documents)
-"""
-
-_LSH_PAIRS_BODY = f"""
-  b AS ({_BUCKET_SQL}),
-  sized AS (SELECT band, bucket FROM b GROUP BY band, bucket
-            HAVING count(*) <= 64),
-  cand AS (SELECT DISTINCT l.doc_id AS left_id, r.doc_id AS right_id
-           FROM (SELECT b.* FROM b JOIN sized USING (band, bucket)) l
-           JOIN (SELECT b.* FROM b JOIN sized USING (band, bucket)) r
-             ON l.band = r.band AND l.bucket = r.bucket
-            AND l.doc_id < r.doc_id)
-"""
-
-
-@q("dedup_weighted_jaccard", f"""
-  WITH {_LSH_PAIRS_BODY},
-  occ AS (SELECT doc_id, s, CAST(count(*) AS BIGINT) AS c
-          FROM ({_SHINGLE_ALL_SQL}) GROUP BY doc_id, s),
-  tot AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS w
-          FROM occ GROUP BY doc_id),
-  ov AS (SELECT cand.left_id, cand.right_id,
-                CAST(sum(least(l.c, r.c)) AS BIGINT) AS wmin
-         FROM cand
-         JOIN occ l ON l.doc_id = cand.left_id
-         JOIN occ r ON r.doc_id = cand.right_id AND r.s = l.s
-         GROUP BY cand.left_id, cand.right_id),
-  wm AS (SELECT cand.left_id, cand.right_id,
-                coalesce(ov.wmin, 0) AS wmin
-         FROM cand LEFT JOIN ov USING (left_id, right_id))
-  SELECT wm.left_id, wm.right_id, wm.wmin,
-         tl.w AS w_l, tr.w AS w_r,
-         CAST(ROUND(CAST(wm.wmin AS DOUBLE)
-                    / (tl.w + tr.w - wm.wmin) * 1000000) AS BIGINT)
-           AS wjac6
-  FROM wm JOIN tot tl ON tl.doc_id = wm.left_id
-  JOIN tot tr ON tr.doc_id = wm.right_id
-""")
-def dedup_weighted_jaccard(spark, sf_dir):
-    """Multiset-Jaccard verify (dd.weighted_jaccard) on the LSH
-    candidate pairs — bag semantics over shingle occurrence counts,
-    Σmax derived as w_l + w_r − Σmin so only Σmin joins. Registry +
-    pytest + oracle verified on demand; demoted from the driver
-    window (see __spark_entry__)."""
-    d = _docs(spark, sf_dir)
-    sigs = dd.minhash_signatures(d)
-    pairs = dd.lsh_candidate_pairs(dd.lsh_buckets(sigs))
-    return dd.weighted_jaccard(d, pairs).select(
-        "left_id", "right_id", "wmin", "w_l", "w_r", "wjac6")
 
 
 _VERDICT_T = _CANOPY_T2   # near-dup edge: >= 20 shared distinct shingles

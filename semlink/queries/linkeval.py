@@ -634,44 +634,6 @@ def rl_one_to_one_greedy(spark, sf_dir):
         max_rounds=_O2O_ROUNDS)
 
 
-@q("rl_score_auc", f"""
-  {_RECS_SQL},
-  {_LAB_SQL},
-  {_MU_SQL},
-  scored AS (
-    SELECT l.is_match,
-           CAST(ROUND(({_SCORE_TERMS}) * 1000000) AS BIGINT) AS fs6
-    FROM lab l CROSS JOIN mu),
-  hist AS (SELECT fs6, CAST(sum(is_match) AS BIGINT) AS p_s,
-                  CAST(sum(1 - is_match) AS BIGINT) AS n_s
-           FROM scored GROUP BY fs6),
-  cum AS (SELECT *, CAST(coalesce(sum(n_s) OVER (ORDER BY fs6
-                         ROWS BETWEEN UNBOUNDED PRECEDING
-                         AND 1 PRECEDING), 0) AS BIGINT) AS cn
-          FROM hist)
-  SELECT CAST(sum(p_s) AS BIGINT) AS p,
-         CAST(sum(n_s) AS BIGINT) AS n,
-         CAST(sum(p_s * (2 * cn + n_s)) AS BIGINT) AS u2,
-         CAST((1000000 * CAST(sum(p_s * (2 * cn + n_s)) AS BIGINT))
-              // (2 * CAST(sum(p_s) AS BIGINT)
-                    * CAST(sum(n_s) AS BIGINT)) AS BIGINT) AS auc6
-  FROM cum
-""")
-def rl_score_auc(spark, sf_dir):
-    """ROC-AUC of the supervised Fellegi-Sunter score on the blocked
-    labeled pairs (linkeval.score_auc): Mann-Whitney U from the
-    per-score histogram with exact integer midrank algebra — ties
-    count 1/2 — and the ordered window runs over distinct scores
-    only (<= 2^K values here), never the pair table. Registry +
-    pytest + oracle verified on demand; demoted from the full
-    driver window (see __spark_entry__)."""
-    from ..linkeval import (fs_estimate_weights, fs_score, score_auc)
-    _, lab = _labeled_pairs(spark, sf_dir)
-    w = fs_estimate_weights(lab, list(_FIELDS))
-    scored = fs_score(lab, w, list(_FIELDS))
-    return score_auc(scored, "fs6")
-
-
 _TH_MU6 = 10_000    # FS link false-match bound (1%), scaled 1e6
 _TH_LAM6 = 50_000   # FS non-link false-non-match bound (5%)
 

@@ -9,30 +9,6 @@ from . import SCALE, _docs, _r6, _read, q
 _ML_W = (0.8, -0.5, 0.3)
 _ML_B = 0.1
 
-@q("ml_logistic_apply", f"""
-  SELECT p_partkey,
-         CAST(ROUND(1.0 / (1.0 + exp(-(
-             {_ML_W[0]} * (CAST(length(p_name) AS DOUBLE) / 32.0)
-           + {_ML_W[1]} * (p_retailprice / 2000.0)
-           + {_ML_W[2]} * (CAST(p_size AS DOUBLE) / 50.0)
-           + {_ML_B}))) * {SCALE}) AS BIGINT) AS score6
-  FROM part
-""")
-def ml_logistic_apply(spark, sf_dir):
-    """M1: vectorized σ(Xw+b) through the production Arrow pandas UDF
-    (apply_model), deterministic literal weights, sigmoid oracle-checked."""
-    import numpy as np
-    from ..learning import apply_model
-    p = _read(spark, sf_dir, "part")
-    feats = p.select("p_partkey", F.array(
-        F.length("p_name").cast("double") / 32.0,
-        F.col("p_retailprice") / 2000.0,
-        F.col("p_size").cast("double") / 50.0).alias("features"))
-    out = apply_model(feats, np.array(_ML_W), _ML_B)
-    return out.select("p_partkey",
-                      _r6(F.col("learning_score")).alias("score6"))
-
-
 @q("ops_metrics", """
   SELECT 'run' AS run_id, 'documents' AS name,
          CAST(count(*) AS BIGINT) AS "rows" FROM documents
@@ -65,51 +41,6 @@ _INITCAP_DUCK = """
     w -> CASE WHEN length(w) = 0 THEN w
               ELSE upper(w[1]) || lower(w[2:]) END), ' ')
 """
-
-@q("ml_feature_assembly", f"""
-  SELECT p_partkey,
-         CAST(len(string_split(p_name, ' ')) AS BIGINT) AS f_len_words,
-         CAST(length(p_name) AS BIGINT) AS f_len_chars,
-         CAST(CASE WHEN p_name = ({_INITCAP_DUCK}) THEN 1 ELSE 0 END
-              AS BIGINT) AS f_is_initcap,
-         CAST(CASE WHEN p_name = lower(p_name) THEN 1 ELSE 0 END
-              AS BIGINT) AS f_is_lower,
-         CAST(ROUND(p_retailprice / 2000.0 * {SCALE}) AS BIGINT) AS feat0_6,
-         CAST(ROUND(CAST(p_size AS DOUBLE) / 50.0 * {SCALE}) AS BIGINT)
-           AS feat1_6,
-         CAST(ROUND(p_retailprice / 4000.0 * {SCALE}) AS BIGINT) AS feat2_6,
-         CAST(len(string_split(p_name, ' ')) AS BIGINT) * {SCALE} AS feat3_6,
-         CAST(length(p_name) AS BIGINT) * {SCALE} AS feat4_6,
-         CAST(CASE WHEN p_name = ({_INITCAP_DUCK}) THEN 1 ELSE 0 END
-              AS BIGINT) * {SCALE} AS feat5_6,
-         CAST(CASE WHEN p_name = lower(p_name) THEN 1 ELSE 0 END
-              AS BIGINT) * {SCALE} AS feat6_6,
-         CAST(0 AS BIGINT) AS feat7_6
-  FROM part
-""")
-def ml_feature_assembly(spark, sf_dir):
-    """X1 + X7 + T5: n-gram shape/casing features and the FIXED-ORDER
-    feature vector (learning.FEATURE_COLS) — the oracle recomputes
-    every array element independently, so a reordering or a broken
-    casing expression fails the hash."""
-    from ..learning import assemble_features
-    p = _read(spark, sf_dir, "part")
-    cands = p.select(
-        "p_partkey",
-        F.col("p_name").alias("ngram"),
-        (F.col("p_retailprice") / 2000.0).alias("prior_prob"),
-        (F.col("p_size").cast("double") / 50.0).alias("link_prob"),
-        (F.col("p_retailprice") / 4000.0).alias("sense_prob"))
-    d = assemble_features(cands)
-    return d.select(
-        "p_partkey",
-        F.col("f_len_words").cast("bigint").alias("f_len_words"),
-        F.col("f_len_chars").cast("bigint").alias("f_len_chars"),
-        F.col("f_is_initcap").cast("bigint").alias("f_is_initcap"),
-        F.col("f_is_lower").cast("bigint").alias("f_is_lower"),
-        *[_r6(F.element_at("features", i + 1)).alias(f"feat{i}_6")
-          for i in range(8)])
-
 
 @q("ml_logistic_fit", """
   SELECT * FROM (VALUES
@@ -215,37 +146,8 @@ _STUMP_APPLY_SQL = " + ".join(
     for s in _STUMPS)
 
 
-@q("ml_stumps_apply", f"""
-  SELECT p_partkey,
-         CAST(ROUND((0.0 + {_STUMP_APPLY_SQL}) * {SCALE}) AS BIGINT)
-           AS margin6,
-         CASE WHEN (0.0 + {_STUMP_APPLY_SQL}) > 0 THEN 1 ELSE -1 END
-           AS pred
-  FROM part
-""")
-def ml_stumps_apply(spark, sf_dir):
-    """M1 for the stump ensemble: the fitted stumps applied to part
-    features as a pure column expression (stump_score_expr) — the
-    DuckDB oracle re-derives the margin term by term in the same
-    order, so the hash pins both the ensemble constants and the
-    expression shape."""
-    from ..learning import stump_score_expr
-    p = _read(spark, sf_dir, "part")
-    feats = p.select(
-        "p_partkey",
-        (F.length("p_name").cast("double") / 32.0).alias("sf0"),
-        (F.col("p_retailprice") / 2000.0).alias("sf1"),
-        (F.col("p_size").cast("double") / 50.0).alias("sf2"))
-    margin = stump_score_expr(_STUMPS, ["sf0", "sf1", "sf2"])
-    return feats.select(
-        "p_partkey",
-        _r6(margin).alias("margin6"),
-        F.when(margin > 0, F.lit(1)).otherwise(F.lit(-1))
-        .cast("long").alias("pred"))
-
-
-# ------------------------------------------------------ consolidated
-# (window-budget consolidation — see queries/rl.py note)
+# ------------------------------------------------------ combined
+# (window budget — see queries/rl.py note)
 
 @q("ml_logistic_features", f"""
   SELECT p_partkey,
@@ -281,8 +183,7 @@ def ml_logistic_features(spark, sf_dir):
     """X1 + X7 + T5 + M1 in one entry: the fixed-order feature-vector
     assembly, the Arrow pandas-UDF σ(Xw+b) model application AND the
     boosted-stump ensemble margin (stump_score_expr), all joined per
-    key (consolidates ml_feature_assembly + ml_logistic_apply +
-    ml_stumps_apply; each remains registered for bench)."""
+    key."""
     import numpy as np
     from ..learning import apply_model, assemble_features, stump_score_expr
     p = _read(spark, sf_dir, "part")

@@ -6,8 +6,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..ngrams import explode_mentions, ngram_duckdb_sql
-from ..textnorm import (NORMALIZE_DUCKDB_SQL, normalize_expr,
-                        soundex_duckdb_sql)
+from ..textnorm import soundex_duckdb_sql
 from . import SCALE, _docs, _r6, _read, _spread, q
 
 
@@ -29,18 +28,6 @@ def rl_ngram_explode(spark, sf_dir):
     m = explode_mentions(d, key_cols=("conv_id",), max_n=3)
     return m.select(F.col("conv_id").alias("doc_id"),
                     "span_start", "span_len", "ngram")
-
-
-@q("rl_normalize_blocking_key", f"""
-  SELECT DISTINCT p_name AS raw,
-         {NORMALIZE_DUCKDB_SQL.format(col='p_name')} AS blocking_key
-  FROM part
-""")
-def rl_normalize(spark, sf_dir):
-    p = _read(spark, sf_dir, "part")
-    return (p.select(F.col("p_name").alias("raw"),
-                     normalize_expr(F.col("p_name")).alias("blocking_key"))
-            .distinct())
 
 
 _DICT_SQL = f"""
@@ -69,15 +56,9 @@ def _spark_dict(spark, sf_dir):
                         _r6(F.col("sense_cnt").cast("double") / F.col("anchor_total"))))
 
 
-@q("rl_dict_build", _DICT_SQL)
-def rl_dict_build(spark, sf_dir):
-    return _spark_dict(spark, sf_dir)
-
-
-@q("rl_threshold_filter", f"""
-  SELECT * FROM ({_DICT_SQL}) WHERE prior6 >= {SCALE // 12}
-""")
 def rl_threshold_filter(spark, sf_dir):
+    """F1: dictionary senses with prior >= 1/12 (the threshold leg of
+    rl_filter_battery)."""
     return _spark_dict(spark, sf_dir).filter(F.col("prior6") >= SCALE // 12)
 
 
@@ -175,32 +156,6 @@ def rl_mention_pairs(spark, sf_dir):
             .select("block_key", "left_doc", "right_doc"))
 
 
-@q("rl_levenshtein", """
-  SELECT DISTINCT p_brand AS a, p_type AS b,
-         levenshtein(p_brand, p_type) AS lev
-  FROM part
-""")
-def rl_levenshtein(spark, sf_dir):
-    p = _read(spark, sf_dir, "part")
-    return (p.select(F.col("p_brand").alias("a"), F.col("p_type").alias("b"))
-            .distinct()
-            .withColumn("lev", F.levenshtein("a", "b").cast("bigint")))
-
-
-@q("rl_jaro_winkler", f"""
-  SELECT DISTINCT p_brand AS a, p_type AS b,
-         CAST(ROUND(jaro_winkler_similarity(p_brand, p_type) * {SCALE})
-              AS BIGINT) AS jw6
-  FROM part
-""")
-def rl_jaro_winkler(spark, sf_dir):
-    from ..pairs import jaro_winkler_udf
-    p = _read(spark, sf_dir, "part")
-    return (p.select(F.col("p_brand").alias("a"), F.col("p_type").alias("b"))
-            .distinct()
-            .withColumn("jw6", _r6(jaro_winkler_udf(F.col("a"), F.col("b")))))
-
-
 _EDGE_SQL = """
   SELECT 'd' || lpad(CAST(a.doc_id AS VARCHAR), 6, '0') AS src,
          'd' || lpad(CAST(b.doc_id AS VARCHAR), 6, '0') AS dst
@@ -236,12 +191,10 @@ def rl_connected_components(spark, sf_dir):
     return run_connected_components(edges, SemlinkConfig(), ckpt_dir=ckpt)
 
 
-# ------------------------------------------------------ consolidated
-# Window-budget consolidation (VERDICT r04 next #7): the driver records
-# only the first 50 contract entries, so same-family single-purpose
-# entries are folded into combined ones carrying BOTH computations in
-# one hash-gated row set; the originals stay registered (demoted from
-# the driver contract in __spark_entry__) for bench/tests.
+# ------------------------------------------------------ combined
+# Window budget (VERDICT r04 next #7): the driver records only the
+# first 50 contract entries, so same-family computations share one
+# combined entry that carries all of them in one hash-gated row set.
 
 _ME_TOKS = "list_filter(string_split_regex(trim({c}), ' +'), x -> x <> '')"
 _ME_DIR_SQL = """
@@ -283,7 +236,7 @@ def rl_string_sims(spark, sf_dir):
     Elkan KDD '96 — pairs.monge_elkan) over the distinct multi-token
     (p_type, p_name) pairs. Per-token-pair JW is scaled to
     BIGINT before the max/mean, so only the final mean divide is a
-    float op (consolidates rl_levenshtein + rl_jaro_winkler)."""
+    float op."""
     from ..pairs import jaro_winkler_udf, monge_elkan
     p = _read(spark, sf_dir, "part")
     prs = (p.select(F.col("p_type").alias("a"),
@@ -311,8 +264,7 @@ def rl_string_sims(spark, sf_dir):
 """)
 def rl_dict_stats(spark, sf_dir):
     """A1-A6 in one entry: anchor/sense/total aggregation (dict build)
-    plus the with_probabilities() prior/link/sense-prob arithmetic
-    (consolidates rl_dict_build + rl_dict_probabilities)."""
+    plus the with_probabilities() prior/link/sense-prob arithmetic."""
     from ..linking import with_probabilities
     d = _spark_dict(spark, sf_dir)
     anchors = d.select(

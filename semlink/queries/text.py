@@ -16,7 +16,7 @@ _STOPR_SQL = f"""
 """
 
 # the 3-term quality score, shared by every oracle that grades docs
-# (text_quality_score, text_token_quality, ops_corpus_report) — ONE
+# (text_quality_score, text_token_quality) — ONE
 # definition so a formula tweak cannot desynchronize an oracle from
 # ts.with_quality_score (review r5s3)
 _QUALITY6_EXPR = f"""CAST(ROUND((
@@ -74,20 +74,6 @@ def text_langid(spark, sf_dir):
     r = ts.lang_id(d)              # does not amortize the spread exchange
     return (d.select("doc_id", "lang").join(r, "doc_id")
             .select("doc_id", "lang", "lang_pred", "top_score6"))
-
-
-@q("text_token_stats", f"""
-  SELECT doc_id,
-         len(list_filter(string_split_regex(trim(text), ' +'), x -> x <> ''))
-           AS ws_tokens,
-         len(regexp_extract_all(text, '{ts.WORD_RE}')) AS word_tokens,
-         length(text) AS n_chars_out
-  FROM documents
-""")
-def text_token_stats(spark, sf_dir):
-    d = ts.with_token_stats(_docs(spark, sf_dir).drop("n_chars"))
-    return d.select("doc_id", "ws_tokens", "word_tokens",
-                    F.col("n_chars").alias("n_chars_out"))
 
 
 @q("text_quality_score", f"""
@@ -427,8 +413,8 @@ def text_pii_stats(spark, sf_dir):
     return ts.with_pii_stats(d.select("doc_id", planted.alias("text")))
 
 
-# ------------------------------------------------------ consolidated
-# (window-budget consolidation — see queries/rl.py note)
+# ------------------------------------------------------ combined
+# (window budget — see queries/rl.py note)
 
 @q("text_token_quality", f"""
   SELECT doc_id,
@@ -444,8 +430,7 @@ def text_pii_stats(spark, sf_dir):
 """)
 def text_token_quality(spark, sf_dir):
     """Token stats + the 3-term quality score joined per doc in one
-    entry (consolidates text_token_stats + text_quality_score; both
-    stay registered for bench)."""
+    entry."""
     d = _docs(spark, sf_dir).drop("n_chars")
     t = ts.with_token_stats(d).select(
         "doc_id", "ws_tokens", "word_tokens",
@@ -551,61 +536,6 @@ def text_novelty(spark, sf_dir):
     + oracle verified on demand; demoted from the driver window (see
     __spark_entry__)."""
     return ts.with_novelty(_docs(spark, sf_dir))
-
-
-_Q6_BODY = f"""
-  SELECT doc_id, lang, source, text,
-         CAST(len(toks) AS BIGINT) AS ws_tokens,
-         {_QUALITY6_EXPR} AS q6
-  FROM (SELECT doc_id, lang, source, text,
-               list_filter(string_split_regex(trim(text), ' +'),
-                           x -> x <> '') AS toks
-        FROM documents)
-"""
-
-
-@q("ops_corpus_report", f"""
-  WITH q AS ({_Q6_BODY}),
-  dup AS (SELECT md5(coalesce(text, '')) AS h, count(*) AS c
-          FROM documents GROUP BY 1)
-  SELECT q.lang, q.source,
-         CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(q.ws_tokens) AS BIGINT) AS tokens,
-         CAST(CAST(sum(q.q6) AS BIGINT) // CAST(count(*) AS BIGINT)
-              AS BIGINT) AS mean_q6,
-         CAST(sum(CASE WHEN dup.c > 1 THEN 1 ELSE 0 END) AS BIGINT)
-           AS dup_docs,
-         CAST((CAST(sum(CASE WHEN dup.c > 1 THEN 1 ELSE 0 END)
-                    AS BIGINT) * 1000000)
-              // CAST(count(*) AS BIGINT) AS BIGINT) AS dup_rate6
-  FROM q JOIN dup ON dup.h = md5(coalesce(q.text, ''))
-  GROUP BY q.lang, q.source
-""")
-def ops_corpus_report(spark, sf_dir):
-    """Per-(lang, source) corpus report card — the rollup a curation
-    run publishes: doc/token counts, mean quality (per-doc scaled
-    bigints first, THEN integer mean — no cross-engine float-sum
-    order), and the exact-duplicate rate via the corpus-wide text
-    digest. One digest groupBy + one report groupBy. Registry +
-    pytest + oracle verified on demand; demoted from the driver
-    window (see __spark_entry__)."""
-    d = _docs(spark, sf_dir).drop("n_chars")
-    q = ts.with_quality_score(d).withColumn("q6", _r6(F.col("quality_score")))
-    h = F.md5(F.coalesce(F.col("text"), F.lit("")))
-    dup = (d.groupBy(h.alias("h"))
-           .agg(F.count(F.lit(1)).alias("c")))
-    return (q.withColumn("h", h)
-            .join(dup, "h")
-            .groupBy("lang", "source")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-                 F.sum("ws_tokens").cast("bigint").alias("tokens"),
-                 F.expr("CAST(sum(q6) AS BIGINT) div count(*)")
-                 .cast("bigint").alias("mean_q6"),
-                 F.sum(F.when(F.col("c") > 1, 1).otherwise(0))
-                 .cast("bigint").alias("dup_docs"),
-                 F.expr("CAST(sum(CASE WHEN c > 1 THEN 1 ELSE 0 END)"
-                        " AS BIGINT) * 1000000 div count(*)")
-                 .cast("bigint").alias("dup_rate6")))
 
 
 @q("text_lang_mix", f"""

@@ -113,6 +113,24 @@ def test_cc_resume_refuses_other_id_types(spark, tmp_path):
     assert ckpt in str(e.value)
 
 
+def test_cc_fresh_table_run_keeps_foreign_files(spark, tmp_path):
+    """A fresh durable run clears only the superstep tables an earlier
+    run left (a stale higher step would poison a later resume), never
+    other files in the caller's checkpoint dir."""
+    ckpt = tmp_path / "ckpt"
+    (ckpt / "edges_step_9.parquet").mkdir(parents=True)
+    (ckpt / "edges_step_9.parquet" / "_SUCCESS").write_text("")
+    (ckpt / "sentinel.txt").write_text("keep")
+    edges = _graphs()["mixed"]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    labels = run_connected_components(df, _PATHS["table"],
+                                      ckpt_dir=str(ckpt))
+    got = {r.mention_id: r.cluster_id for r in labels.collect()}
+    assert got == _uf_oracle(edges)
+    assert (ckpt / "sentinel.txt").read_text() == "keep"
+    assert not (ckpt / "edges_step_9.parquet").exists()
+
+
 def test_cc_checkpoint_mode_validated():
     with pytest.raises(ValueError, match="cc_checkpoint"):
         SemlinkConfig(cc_checkpoint="durable")

@@ -1,5 +1,6 @@
 """Datapipe operators vs the DuckDB oracle at sf0.001 (fast subset —
-the full 29-query sweep runs via tools/oracle_check.py at sf0.01)."""
+the full sweep of the 53-entry driver contract runs via
+tools/oracle_check.py at sf0.01)."""
 import duckdb
 import pytest
 
