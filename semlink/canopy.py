@@ -27,14 +27,14 @@ id-ordered McCallum procedure.
 Scale shape: the T2 adjacency is derived once from the canonical
 pair-similarity table (two selects + union — no new shuffle of the
 data); each round is two pool semi joins, one groupBy-min keyed by
-record id, and one anti join on a pool that only shrinks
-(localCheckpointed per round — within-job materialization, as in the
-matching loop); the only driver action is the 1-row convergence
-probe. Membership at the end is ONE equi join of the elected centers
-against the loose-threshold adjacency. Round count is the greedy-MIS
-dependency depth — O(log n) on realistic graphs, adversarial chains
-linear (same risk class as the CC superstep bound; the round cap
-raises rather than returning a partial result).
+record id, and one anti join on a pool that only shrinks (an
+``ops.cut`` per round — within-job materialization, as in the
+matching loop); the pool cut's own row count is the convergence
+signal, so no probe job runs. Membership at the end is ONE equi join
+of the elected centers against the loose-threshold adjacency. Round
+count is the greedy-MIS dependency depth — O(log n) on realistic
+graphs, adversarial chains linear (same risk class as the CC superstep
+bound; the round cap raises rather than returning a partial result).
 
 The reference mount is empty (SURVEY.md §0); this is the published
 blocking front-end [P McCallum-Nigam-Ungar KDD '00] for the
@@ -44,6 +44,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .ops import cut
 
 
 def canopy_members(ids: DataFrame, sims: DataFrame,
@@ -66,31 +68,31 @@ def canopy_members(ids: DataFrame, sims: DataFrame,
     # checkpoint the T2 adjacency once: every round fires several
     # actions against it, and without the cut each one would re-run
     # the caller's full sims lineage (e.g. the shingle self-join)
-    adj = (e2.select(F.col(left_col).alias("src"),
-                     F.col(right_col).alias("dst"))
-           .unionByName(e2.select(F.col(right_col).alias("src"),
-                                  F.col(left_col).alias("dst"))))\
-        .localCheckpoint()
-    pool = ids.select(F.col(id_col).alias("v")).localCheckpoint()
+    adj, _ = cut(e2.select(F.col(left_col).alias("src"),
+                           F.col(right_col).alias("dst"))
+                 .unionByName(e2.select(F.col(right_col).alias("src"),
+                                        F.col(left_col).alias("dst"))),
+                 "canopy_t2_adjacency")
+    pool, _ = cut(ids.select(F.col(id_col).alias("v")), "canopy_pool")
     centers = None
     done = False
     for _ in range(max_rounds):
         padj = (adj.join(pool.withColumnRenamed("v", "src"), "src")
                 .join(pool.withColumnRenamed("v", "dst"), "dst"))
         minn = padj.groupBy("src").agg(F.min("dst").alias("_mn"))
-        elected = (pool.join(minn.withColumnRenamed("src", "v"),
-                             "v", "left")
-                   .filter(F.col("_mn").isNull()
-                           | (F.col("v") < F.col("_mn")))
-                   .select("v").localCheckpoint())
+        elected, _ = cut(pool.join(minn.withColumnRenamed("src", "v"),
+                                   "v", "left")
+                         .filter(F.col("_mn").isNull()
+                                 | (F.col("v") < F.col("_mn")))
+                         .select("v"), "canopy_centers")
         centers = elected if centers is None \
             else centers.unionByName(elected)
         covered = (elected.unionByName(
             padj.join(elected.withColumnRenamed("v", "src"), "src")
             .select(F.col("dst").alias("v"))).distinct())
-        pool = pool.join(covered, "v", "left_anti").localCheckpoint()
-        # bounded action: 0/1-row convergence probe, never the pool
-        if pool.limit(1).count() == 0:
+        pool, seen = cut(pool.join(covered, "v", "left_anti"),
+                         "canopy_pool")
+        if seen["rows"] == 0:
             done = True
             break
     if not done:

@@ -12,9 +12,10 @@ Superstep protocol (north rule: "checkpointed per superstep ...
 resume any superstep from checkpoint"): one loop on the caller's
 string ids, cutting lineage after each (large-star + small-star) round
 (without a cut the plan tree grows exponentially across iterations).
-Durable runs commit each round as `<ckpt>/edges_step_<i>` (src, dst)
-via TableIO (parquet `_SUCCESS` / Iceberg snapshot = atomic commit) —
-the whole durable layout; local runs ``localCheckpoint`` instead.
+Each round is one ``ops.cut``: durable runs commit it as
+`<ckpt>/edges_step_<i>` (src, dst) via TableIO (parquet `_SUCCESS` /
+Iceberg snapshot = atomic commit) — the whole durable layout; local
+runs take the cut's ``localCheckpoint`` instead.
 `run_connected_components(resume=True)` continues from the highest
 committed step; a killed run produces byte-identical clusters (tested).
 """
@@ -25,7 +26,7 @@ import glob
 import os
 import shutil
 
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .config import DEFAULT, SemlinkConfig
@@ -131,12 +132,6 @@ def run_connected_components(
     # which skips the per-superstep parquet write+read round trip)
     durable = (resume or stop_after_step is not None
                or cfg.cc_checkpoint == "table")
-
-    def commit(df: DataFrame, name: str) -> DataFrame:
-        if durable:
-            return io.checkpoint(df, name)
-        return df.localCheckpoint(eager=True)
-
     # resume lookup first: a run with committed steps never re-reads
     # the (possibly expensive) upstream edge lineage
     start, cur = 0, None
@@ -181,17 +176,15 @@ def run_connected_components(
     prev_fp = None
     for i in range(start, cfg.max_cc_iterations):
         ls = large_star(cur).persist()     # small_star consumes it twice
-        stepped = small_star(ls)
-        # convergence fingerprint rides on the cut's own action
-        # (observe): ONE action per superstep instead of cut + agg
-        obs = Observation(f"cc_step_{i}")
-        stepped = stepped.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.expr("bit_xor(xxhash64(src, dst))"), F.lit(0)).alias("h"))
-        cur = commit(stepped, f"edges_step_{i}")  # atomic commit / lineage cut
+        # atomic commit / lineage cut; the convergence fingerprint rides
+        # its own action: ONE action per superstep instead of cut + agg
+        cur, seen = cut(
+            small_star(ls), f"edges_step_{i}",
+            F.coalesce(F.expr("bit_xor(xxhash64(src, dst))"), F.lit(0))
+            .alias("h"),
+            io=io if durable else None)
         ls.unpersist()
-        fp = (obs.get["n"], obs.get["h"])
+        fp = (seen["rows"], seen["h"])
         if fp == prev_fp:
             break
         prev_fp = fp
@@ -433,13 +426,15 @@ def fmt_cc_id(c):
     return F.lpad(c.cast("string"), _PAD, "0")
 
 
-def _center_scan(e: DataFrame, max_rounds: int, merge: bool,
+def _center_scan(edges: DataFrame, left_col: str, right_col: str,
+                 sim_col: str, max_rounds: int, merge: bool,
                  op_name: str):
     """Shared locally-dominant best-first scan for center /
-    merge-center clustering. ``e`` is a localCheckpointed (l, r, s)
-    edge table. Returns (state, merges): ``state`` = (v, c, ctr)
-    decided nodes (None if no edge ever processed), ``merges`` =
-    (c1, c2) cluster-merge edges (merge mode only, else None).
+    merge-center clustering over the caller's weighted edges, cut once
+    as an (l, r, s) table. Returns (state, merges): ``state`` =
+    (v, c, ctr) decided nodes (None if no edge ever processed),
+    ``merges`` = (c1, c2) cluster-merge edges (merge mode only, else
+    None).
 
     Mode difference, faithful to the sequential rules: CENTER skips
     every edge touching a member, and member status is permanent, so
@@ -452,7 +447,11 @@ def _center_scan(e: DataFrame, max_rounds: int, merge: bool,
     merge — eager pruning would get that wrong)."""
     state = None  # (v, c, ctr) — decided nodes only
     merges = None  # (c1, c2) cluster merges (merge mode)
-    done = e.limit(1).count() == 0
+    # each edge cut's row count is the convergence signal
+    e, seen = cut(edges.select(F.col(left_col).alias("l"),
+                               F.col(right_col).alias("r"),
+                               F.col(sim_col).alias("s")), op_name)
+    done = seen["rows"] == 0
     for _ in range(max_rounds):
         if done:
             break
@@ -465,8 +464,8 @@ def _center_scan(e: DataFrame, max_rounds: int, merge: bool,
             .filter(F.col("_rk") == 1))
         dom = (rk1.groupBy("l", "r", "s")
                .agg(F.count(F.lit(1)).alias("_c"))
-               .filter(F.col("_c") == 2).drop("_c")
-               .localCheckpoint())
+               .filter(F.col("_c") == 2).drop("_c"))
+        dom, _ = cut(dom, f"{op_name}_dominant")
         if state is None:
             su = dom.select("l", "r",
                             F.lit(None).cast("bigint").alias("_cu"),
@@ -516,8 +515,8 @@ def _center_scan(e: DataFrame, max_rounds: int, merge: bool,
             # shallow without a per-round materialization job
             merges = (mrows if merges is None
                       else merges.unionByName(mrows))
-        state = (new_rows if state is None
-                 else state.unionByName(new_rows)).localCheckpoint()
+        state, _ = cut(new_rows if state is None
+                       else state.unionByName(new_rows), f"{op_name}_state")
         pruned = (e
                   # every dominant edge reached its sequential slot
                   .join(dom.select("l", "r"), ["l", "r"], "left_anti")
@@ -543,10 +542,10 @@ def _center_scan(e: DataFrame, max_rounds: int, merge: bool,
                                 & F.col("_kv").eqNullSafe(F.lit(False))))
                       .filter(~(F.col("_cu").isNotNull()
                                 & F.col("_cv").isNotNull())))
-        e = pruned.select("l", "r", "s").localCheckpoint()
-        # probe AFTER processing so a graph converging in exactly
+        e, seen = cut(pruned.select("l", "r", "s"), op_name)
+        # test AFTER processing so a graph converging in exactly
         # max_rounds rounds succeeds (matches the unrolled oracle)
-        done = e.limit(1).count() == 0
+        done = seen["rows"] == 0
     if not done:
         raise RuntimeError(
             f"{op_name} did not converge in {max_rounds} rounds")
@@ -584,15 +583,13 @@ def center_clusters(nodes: DataFrame, edges: DataFrame,
     Scale per round (shared _center_scan core): one symmetrized
     projection, one per-node rank window, one count-2 groupBy for
     dominance, two state joins for the transition, and the eager
-    prune — all keyed by node or edge; ONE 0/1-row convergence
-    probe. Returns (id_col, cluster, is_center) for every node;
-    untouched nodes become singleton centers. Raises past
-    ``max_rounds`` so the unrolled oracle can never silently
-    diverge."""
-    lc, rc, sc = F.col(left_col), F.col(right_col), F.col(sim_col)
-    e = edges.select(lc.alias("l"), rc.alias("r"), sc.alias("s")) \
-        .localCheckpoint()
-    state, _ = _center_scan(e, max_rounds, merge=False,
+    prune — all keyed by node or edge; the round's edge cut counts
+    the edges left, the convergence signal. Returns (id_col, cluster,
+    is_center) for every node; untouched nodes become singleton
+    centers. Raises past ``max_rounds`` so the unrolled oracle can
+    never silently diverge."""
+    state, _ = _center_scan(edges, left_col, right_col, sim_col,
+                            max_rounds, merge=False,
                             op_name="center_clusters")
     base = nodes.select(F.col(id_col))
     if state is None:
@@ -639,10 +636,8 @@ def merge_center_clusters(nodes: DataFrame, edges: DataFrame,
     import tempfile
 
     from .config import SemlinkConfig
-    lc, rc, sc = F.col(left_col), F.col(right_col), F.col(sim_col)
-    e = edges.select(lc.alias("l"), rc.alias("r"), sc.alias("s")) \
-        .localCheckpoint()
-    state, merges = _center_scan(e, max_rounds, merge=True,
+    state, merges = _center_scan(edges, left_col, right_col, sim_col,
+                                 max_rounds, merge=True,
                                  op_name="merge_center_clusters")
     base = nodes.select(F.col(id_col))
     if state is None:
@@ -652,19 +647,19 @@ def merge_center_clusters(nodes: DataFrame, edges: DataFrame,
     st = state.select(F.col("v").alias(id_col),
                       F.col("c").alias("cluster"),
                       F.col("ctr").alias("is_center"))
-    if merges is not None and merges.limit(1).count() > 0:
-        labels = run_connected_components(
-            merges.select(fmt_cc_id(F.col("c1")).alias("src"),
-                          fmt_cc_id(F.col("c2")).alias("dst")),
-            cfg or SemlinkConfig(),
-            ckpt_dir=ckpt_dir or tempfile.mkdtemp(prefix="semlink_mc_cc_"))
-        relabel = labels.select(
-            F.col("mention_id").cast("bigint").alias("cluster"),
-            F.col("cluster_id").cast("bigint").alias("_new"))
-        st = (st.join(relabel, "cluster", "left")
-              .select(F.col(id_col),
-                      F.coalesce("_new", "cluster").alias("cluster"),
-                      "is_center"))
+    # an empty merge graph gets empty labels: every cluster stays
+    labels = run_connected_components(
+        merges.select(fmt_cc_id(F.col("c1")).alias("src"),
+                      fmt_cc_id(F.col("c2")).alias("dst")),
+        cfg or SemlinkConfig(),
+        ckpt_dir=ckpt_dir or tempfile.mkdtemp(prefix="semlink_mc_cc_"))
+    relabel = labels.select(
+        F.col("mention_id").cast("bigint").alias("cluster"),
+        F.col("cluster_id").cast("bigint").alias("_new"))
+    st = (st.join(relabel, "cluster", "left")
+          .select(F.col(id_col),
+                  F.coalesce("_new", "cluster").alias("cluster"),
+                  "is_center"))
     return (base.join(st, id_col, "left")
             .select(F.col(id_col),
                     F.coalesce("cluster", F.col(id_col))

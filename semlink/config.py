@@ -66,13 +66,14 @@ class SemlinkConfig:
     # --- clustering (SURVEY C2-C5) ---
     max_cc_iterations: int = 50
     checkpoint_dir: str = "/tmp/semlink_ckpt"
-    # Where the one CC superstep loop cuts lineage after each round:
-    # "local" (localCheckpoint — the fast path; blocks are
-    # executor-memory/disk and GC-managed) or "table" (durable TableIO
-    # commits of `edges_step_<i>` string-id edges — the resumable
-    # north-rule protocol). run_connected_components FORCES "table"
-    # whenever resume/stop_after_step is requested; the mode never
-    # changes the labels (round-6 optimization; guide §5).
+    # How the one CC superstep loop's ``ops.cut`` commits each round:
+    # "local" (the cut's localCheckpoint — the fast path; blocks are
+    # executor-memory/disk and GC-managed) or "table" (``cut(...,
+    # io=...)``: durable TableIO commits of `edges_step_<i>` string-id
+    # edges — the resumable north-rule protocol).
+    # run_connected_components FORCES "table" whenever
+    # resume/stop_after_step is requested; the mode never changes the
+    # labels (round-6 optimization; guide §5).
     cc_checkpoint: str = "local"
     # Small-graph finishing step: when the materialized edge set is at
     # most this many rows, labels come from a driver union-find (same

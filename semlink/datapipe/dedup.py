@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..ops import cut
+
 # Default LSH parameterization. The capture probability of a pair with
 # Jaccard similarity s under (bands b, rows-per-band r) is the S-curve
 #   P(candidate) = 1 − (1 − s^r)^b
@@ -181,10 +183,10 @@ def ngram_jaccard(df: DataFrame, pairs: DataFrame,
     # of the intersection join + the size table) and the candidate
     # pair table TWICE (intersection + final join), re-running their
     # upstream chains per consumer — cut each once (round-6; guide §5)
-    pairs = pairs.localCheckpoint(eager=True)
-    sh = (shingles_exploded(df, id_col, text_col, n)
-          .withColumnRenamed(id_col, "_id").distinct()
-          .localCheckpoint(eager=True))
+    pairs, _ = cut(pairs, "jaccard_pairs")
+    sh, _ = cut(shingles_exploded(df, id_col, text_col, n)
+                .withColumnRenamed(id_col, "_id").distinct(),
+                "jaccard_shingles")
     sizes = sh.groupBy("_id").agg(F.count(F.lit(1)).alias("n_sh"))
     ex = sh
     inter = (pairs
@@ -254,11 +256,10 @@ def setsim_join_pairs(df: DataFrame, id_col: str = "doc_id",
     w_sz = Window.partitionBy(id_col)
     # the canonically-ordered table feeds the prefix filter (both join
     # sides) AND the verify fan-out — cut it once (round-6; guide §5)
-    ordered = (sh.join(dfreq, "s")
-               .select(F.col(id_col), "s",
-                       F.row_number().over(w_pos).cast("long").alias("pos"),
-                       F.count(F.lit(1)).over(w_sz).alias("sz"))
-               .localCheckpoint(eager=True))
+    ordered, _ = cut(sh.join(dfreq, "s").select(
+        F.col(id_col), "s",
+        F.row_number().over(w_pos).cast("long").alias("pos"),
+        F.count(F.lit(1)).over(w_sz).alias("sz")), "setsim_ordered")
     prefix_len = F.expr(
         f"sz - (({t_num} * sz + {t_den - 1}) div {t_den}) + 1")
     pref = ordered.filter(F.col("pos") <= prefix_len)
@@ -415,11 +416,11 @@ def containment_dedup(df: DataFrame, id_col: str = "doc_id",
     # nd feeds the shingle table, the eligibility gate and both verify
     # joins; sh feeds the frequency table, the probe AND the candidate
     # join — cut each once (round-6; guide §5)
-    nd = (base.groupBy("norm")
-          .agg(F.min("_id").alias("_id"), F.min("tc").alias("tc"))
-          .localCheckpoint(eager=True))
-    sh = (shingles_exploded(nd, "_id", "norm", shingle_n).distinct()
-          .localCheckpoint(eager=True))
+    nd, _ = cut(base.groupBy("norm")
+                .agg(F.min("_id").alias("_id"), F.min("tc").alias("tc")),
+                "containment_docs")
+    sh, _ = cut(shingles_exploded(nd, "_id", "norm", shingle_n).distinct(),
+                "containment_shingles")
     dfreq = sh.groupBy("s").agg(F.count(F.lit(1)).alias("_df"))
     eligible = nd.filter(F.col("tc") >= shingle_n)
     w = Window.partitionBy("_id").orderBy("_df", "s")

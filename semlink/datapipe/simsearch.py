@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..ops import cut, spread
+
 
 def cosine_expr(a: str, b: str) -> Column:
     """Cosine similarity as a pure SQL expression (HOF lambdas),
@@ -140,13 +142,13 @@ def kmeans_centroids(embeddings: DataFrame, k: int = 8, iters: int = 4,
     spark = embeddings.sparkSession
     cur = seed_centroids(embeddings, k, id_col, emb_col)
     cents = {r["cell"]: list(r["c_emb"]) for r in cur.collect()}
-    # every Lloyd iteration re-reads the full vector table — cache it
-    # once at cluster parallelism (the scan is one input split at
-    # bench scale) instead of re-running scan + projection per
-    # iteration (round-6 optimization; guide §5 caching)
-    base = (embeddings.select(id_col, emb_col)
-            .repartition(spark.sparkContext.defaultParallelism)
-            .localCheckpoint(eager=True))
+    # every Lloyd iteration re-reads the full vector table — spread and
+    # cut it once (the scan is one input split at bench scale) instead
+    # of re-running scan + projection per iteration (round-6
+    # optimization; guide §5 caching)
+    base, _ = cut(spread(embeddings.select(id_col, emb_col),
+                         spark.sparkContext.defaultParallelism),
+                  "kmeans_vectors")
     e6 = F.lit(1_000_000.0)
     for _ in range(iters):
         cent_df = spark.createDataFrame(
@@ -180,23 +182,24 @@ def cosine_near_dup_edges_ivf(embeddings: DataFrame, centroids: DataFrame,
     second probe. Work is Σ_cell |cell|² instead of N²; the join
     shuffles on cell only."""
     # both sides of the cell self-join consume the assignment —
-    # materialize it once or the centroid crossJoin + per-id window
-    # run twice. localCheckpoint (not persist): persist() pins blocks
-    # in the CacheManager until an explicit unpersist, which this
-    # function can't issue (it returns a lazy plan), so repeated calls
-    # in a long-lived session would accumulate cached partitions
-    # (ADVICE r03); localCheckpointed blocks are GC-cleaned with the
-    # DataFrame by the ContextCleaner.
+    # cut it once or the centroid crossJoin + per-id window run
+    # twice. A cut, not persist: persist() pins blocks in the
+    # CacheManager until an explicit unpersist, which this function
+    # can't issue (it returns a lazy plan), so repeated calls in a
+    # long-lived session would accumulate cached partitions (ADVICE
+    # r03); a cut's blocks are GC-cleaned with the DataFrame by the
+    # ContextCleaner.
     # explicit numPartitions so AQE's byte-targeted coalescing cannot
     # squash the small-byte but CPU-dense cell self-join below onto
     # 1-2 tasks (round-6 A/B: global minPartitionSize tuning was a
     # wash, an explicit keyed repartition here wins ~25%); keying by
-    # cell lets both join sides reuse the one exchange
+    # cell lets both join sides reuse the one exchange. Not a spread:
+    # it co-partitions the join input, whatever the input's width.
     spark = embeddings.sparkSession
-    a = assign_cells(embeddings.select(id_col, emb_col), centroids,
-                     id_col, nprobe=nprobe, emb_col=emb_col) \
-        .repartition(spark.sparkContext.defaultParallelism, "cell") \
-        .localCheckpoint(eager=True)
+    a, _ = cut(assign_cells(embeddings.select(id_col, emb_col), centroids,
+                            id_col, nprobe=nprobe, emb_col=emb_col)
+               .repartition(spark.sparkContext.defaultParallelism, "cell"),
+               "ivf_cells")
     l = a.select(F.col(id_col).alias("query_id"),
                  F.col(emb_col).alias("q_emb"), "cell")
     r = a.select(F.col(id_col).alias("cand_id"),
@@ -322,11 +325,11 @@ def pq_codebooks(embeddings: DataFrame, dim: int, m: int = 4, k: int = 8,
     pos) scaled-bigint partial sums are bit-identical to m separate
     runs, while the driver issues 1 + iters actions instead of
     m·(1 + iters) (round-6 optimization; guide §1.2 item 1 — fewer
-    passes). The exploded table is repartitioned to cluster
-    parallelism (the embeddings scan is one input split at bench
-    scale) and localCheckpointed so each iteration re-reads cached
-    subvectors instead of re-running the scan + explode. Only the
-    m·k·(dim/m) centroid doubles ever reach the driver.
+    passes). The exploded table is spread to cluster parallelism (the
+    embeddings scan is one input split at bench scale) and cut, so
+    each iteration re-reads cut subvectors instead of re-running the
+    scan + explode. Only the m·k·(dim/m) centroid doubles ever reach
+    the driver.
 
     Determinism discipline unchanged: k lowest-id seeds per subspace,
     scaled-bigint distance rank (ties cell asc), scaled-bigint mean
@@ -335,9 +338,9 @@ def pq_codebooks(embeddings: DataFrame, dim: int, m: int = 4, k: int = 8,
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     spark = embeddings.sparkSession
-    sub = (_pq_subvectors(embeddings, dim, m, id_col, emb_col)
-           .repartition(spark.sparkContext.defaultParallelism)
-           .localCheckpoint(eager=True))
+    sub, _ = cut(spread(_pq_subvectors(embeddings, dim, m, id_col, emb_col),
+                        spark.sparkContext.defaultParallelism),
+                 "pq_subvectors")
     ws = Window.partitionBy("subspace").orderBy(id_col)
     cur = (sub.withColumn("_rk", F.row_number().over(ws))
            .filter(F.col("_rk") <= k)
@@ -470,13 +473,12 @@ def ivfpq_codes(embeddings: DataFrame, dim: int, coarse_k: int = 8,
     # cluster parallelism instead of re-running the coarse
     # crossJoin-assignment window for every downstream action
     # (round-6 optimization; guide §5 caching / §1.2 fewer passes)
-    resid = (a.join(F.broadcast(cents), "cell")
-             .select(F.col(id_col), "cell",
-                     F.zip_with(emb_col, "c_emb",
-                                lambda x, c: x.cast("double") - c)
-                     .alias("residual"))
-             .repartition(spark.sparkContext.defaultParallelism)
-             .localCheckpoint(eager=True))
+    resid, _ = cut(spread(
+        a.join(F.broadcast(cents), "cell").select(
+            F.col(id_col), "cell",
+            F.zip_with(emb_col, "c_emb", lambda x, c: x.cast("double") - c)
+            .alias("residual")),
+        spark.sparkContext.defaultParallelism), "ivfpq_residuals")
     cb = pq_codebooks(resid.select(id_col, F.col("residual")
                                    .alias(emb_col)),
                       dim=dim, m=m, k=k, iters=iters, id_col=id_col)

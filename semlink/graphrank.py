@@ -27,43 +27,36 @@ Scale shape: per iteration ONE equi join of ranks onto edges (both
 sides partitioned by src; a hot hub fans out to its out-edges —
 bounded by max out-degree, and AQE skew-join splits hot sources), one
 map-side-combined groupBy(dst), a 1-row dangling aggregate and a
-1-row N broadcast. K iterations = K such rounds; the plan is unrolled
-lineage for small K (callers needing K >> 5 should checkpoint
-per-superstep exactly as cluster.py's connected components do).
+1-row N broadcast. K iterations = K such rounds, each ended by an
+``ops.cut`` of the rank table, as cluster.py's connected components
+cut each superstep.
 """
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .ops import cut
+
 SCALE9 = 1_000_000_000
 
 
 def pagerank(edges: DataFrame, iters: int = 3,
-             src_col: str = "src_id", dst_col: str = "dst_id",
-             checkpoint: bool = True) -> DataFrame:
+             src_col: str = "src_id", dst_col: str = "dst_id") -> DataFrame:
     """Integer-exact damped PageRank; returns (id, pr9) after `iters`
-    synchronous iterations over the DISTINCT edge set.
-
-    ``checkpoint=False`` keeps the full declarative lineage — only for
-    plan inspection (tools/explain_audit.py audits ONE iteration's
-    join shape that way); real runs keep the per-superstep cut."""
-    e = edges.select(F.col(src_col).alias("src_id"),
-                     F.col(dst_col).alias("dst_id")).distinct()
-    if checkpoint:
-        # every iteration's superstep cut re-evaluates its inputs: cut
-        # the distinct edge set, node set and out-degree table ONCE so
-        # K iterations re-read three cached tables instead of
-        # re-running the upstream distinct/groupBy K times each
-        # (round-6; guide §5 caching)
-        e = e.localCheckpoint(eager=True)
-    nodes = (e.select(F.col("src_id").alias("id"))
-             .union(e.select(F.col("dst_id").alias("id"))).distinct())
-    outd = e.groupBy("src_id").agg(
-        F.count(F.lit(1)).cast("long").alias("outdeg"))
-    if checkpoint:
-        nodes = nodes.localCheckpoint(eager=True)
-        outd = outd.localCheckpoint(eager=True)
+    synchronous iterations over the DISTINCT edge set."""
+    # every iteration's superstep cut re-evaluates its inputs: cut the
+    # distinct edge set, node set and out-degree table ONCE so K
+    # iterations re-read three cut tables instead of re-running the
+    # upstream distinct/groupBy K times each (round-6; guide §5 caching)
+    e, _ = cut(edges.select(F.col(src_col).alias("src_id"),
+                            F.col(dst_col).alias("dst_id")).distinct(),
+               "pagerank_edges")
+    nodes, _ = cut(e.select(F.col("src_id").alias("id"))
+                   .union(e.select(F.col("dst_id").alias("id"))).distinct(),
+                   "pagerank_nodes")
+    outd, _ = cut(e.groupBy("src_id").agg(
+        F.count(F.lit(1)).cast("long").alias("outdeg")), "pagerank_outdeg")
     nn = nodes.agg(F.count(F.lit(1)).cast("long").alias("n"))
     r = (nodes.crossJoin(nn)
          .select("id", F.expr(f"{SCALE9} div n").alias("pr9")))
@@ -89,6 +82,5 @@ def pagerank(edges: DataFrame, iters: int = 3,
         # iteration (contribution join + dangling aggregate), so an
         # unbroken plan re-computes r_{k-1} 2^k times and stacks every
         # 1-row crossJoin of every past iteration into one tree
-        if checkpoint:
-            r = r.localCheckpoint()
+        r, _ = cut(r, "pagerank_ranks")
     return r

@@ -11,9 +11,10 @@ tested path and ``fmt="iceberg"`` is a config flip. On a real cluster:
 
 and pass ``TableIO(fmt="iceberg", root="lake.db")``.
 
-Checkpoint writes (clustering supersteps) ALWAYS write-then-read-back a
-materialized table — a hard lineage cut, required for iterative CC
-(SURVEY §4.2) and for resume-from-checkpoint (north rule).
+Durable checkpoints (``ops.cut(..., io=...)``: clustering supersteps,
+merge-rematch iterations) write-then-read-back a table through this
+class — a hard lineage cut that survives the job, required for
+resume-from-checkpoint (north rule).
 """
 
 from __future__ import annotations
@@ -54,14 +55,3 @@ class TableIO:
             return spark.catalog.tableExists(self._loc(name))
         loc = self._loc(name)
         return os.path.exists(os.path.join(loc, "_SUCCESS"))
-
-    def checkpoint(self, df: DataFrame, name: str) -> DataFrame:
-        """Materialize + read back: hard lineage truncation.
-
-        Parquet's ``_SUCCESS`` marker (resp. Iceberg's atomic snapshot
-        commit) is the atomicity gate: a killed write leaves no marker,
-        so resume logic treats the step as absent (SURVEY C5).
-        """
-        spark = df.sparkSession
-        self.write(df, name)
-        return self.read(spark, name)

@@ -25,9 +25,10 @@ Scale shape per iteration (everything reuses audited primitives):
 The per-iteration assignment table is checkpointed behind the same
 ``_SUCCESS``-gated TableIO commit as the CC supersteps, so a killed
 job resumes from the last committed iteration (``resume=True``) and
-replays nothing before it. Convergence = an iteration contributing
-zero merge edges (checked on the bounded per-iteration edge count);
-the scheme list bounds the iteration count either way.
+replays nothing before it. An iteration contributing zero merge
+edges leaves the assignment as it was; the scheme list bounds the
+iteration count. A fresh run deletes only the ``assign_iter_*`` and
+``cc_iter_*`` entries of the checkpoint dir, which it owns.
 
 The reference mount is empty (SURVEY.md §0); the capability contract
 is BASELINE.json's blocking + pairwise-scoring + transitive-
@@ -36,6 +37,7 @@ closure.
 """
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 from collections.abc import Callable, Sequence
@@ -48,6 +50,7 @@ from .cluster import (fmt_cc_id, golden_records,
 from .config import SemlinkConfig
 from .io import TableIO
 from .linkeval import block_pairs
+from .ops import cut
 
 
 
@@ -145,11 +148,11 @@ def greedy_one_to_one(pairs: DataFrame,
     superstep bound, pytest-pinned).
 
     Scale: each round is two windows (keyed by the two endpoint
-    columns) and two anti equi joins on a set that only shrinks;
-    the only driver action is the 1-row convergence count. Edge
-    lineage is truncated per round with localCheckpoint (within-job
+    columns) and two anti equi joins on a set that only shrinks.
+    Edge lineage is truncated per round with ``ops.cut`` (within-job
     materialization; restart-safety belongs to the caller's
-    checkpoint of the RESULT, as with run_connected_components).
+    checkpoint of the RESULT, as with run_connected_components), and
+    the edge cut's own row count is the convergence signal.
 
     Returns one row per accepted pair: (*group_cols, left, right,
     score, rnd) with rnd = the 1-based round the pair became locally
@@ -160,8 +163,8 @@ def greedy_one_to_one(pairs: DataFrame,
     (group_l, group_r) candidate pair carries its own bipartite
     member matching). Windows partition by (group, endpoint) and
     removals join on (group, endpoint), so groups never interact;
-    the round count is the max over groups and the convergence probe
-    stays one global 0/1-row action.
+    the round count is the max over groups and convergence stays one
+    global row count.
     """
     g = [F.col(c) for c in group_cols]
     lc, rc, sc = F.col(left_col), F.col(right_col), F.col(score_col)
@@ -177,15 +180,14 @@ def greedy_one_to_one(pairs: DataFrame,
                    Window.partitionBy(*gr)
                    .orderBy(F.desc(score_col), F.asc(left_col))))
                .filter((F.col("_rl") == 1) & (F.col("_rr") == 1))
-               .select(*g, lc, rc, sc, F.lit(rnd).alias("rnd"))
-               .localCheckpoint())  # consumed 3× per round (union + antis)
+               .select(*g, lc, rc, sc, F.lit(rnd).alias("rnd")))
+        dom, _ = cut(dom, "greedy_dominant")  # read 3× (union + antis)
         accepted = dom if accepted is None else accepted.unionByName(dom)
-        edges = (edges
-                 .join(dom.select(*gl), gl, "left_anti")
-                 .join(dom.select(*gr), gr, "left_anti")
-                 .localCheckpoint())
-        # bounded action: 0/1-row convergence probe, never the pairs
-        if edges.limit(1).count() == 0:
+        edges, seen = cut(edges
+                          .join(dom.select(*gl), gl, "left_anti")
+                          .join(dom.select(*gr), gr, "left_anti"),
+                          "greedy_edges")
+        if seen["rows"] == 0:
             return accepted
     raise RuntimeError(
         f"greedy_one_to_one did not converge in {max_rounds} rounds")
@@ -221,8 +223,12 @@ def merge_rematch(recs: DataFrame,
     ckpt = ckpt_dir or cfg.checkpoint_dir
     io = TableIO(fmt=cfg.table_format, root=ckpt)
     spark = recs.sparkSession
-    if not resume and os.path.isdir(ckpt) and io.fmt == "parquet":
-        shutil.rmtree(ckpt, ignore_errors=True)
+    if not resume and io.fmt == "parquet":
+        # a fresh run drops the iterations an earlier run committed,
+        # and only those: the rest of the directory is the caller's
+        for pat in ("assign_iter_*", "cc_iter_*"):
+            for old in glob.glob(os.path.join(glob.escape(ckpt), pat)):
+                shutil.rmtree(old, ignore_errors=True)
 
     assign = recs.select(F.col(rec_id_col),
                          F.col(rec_id_col).alias("cluster_id"))
@@ -240,11 +246,7 @@ def merge_rematch(recs: DataFrame,
         edges = (pairs.filter(match_cond(pairs))
                  .select(_fmt(F.col("rec_l")).alias("src"),
                          _fmt(F.col("rec_r")).alias("dst")))
-        # bounded action: the cluster-graph edge count only — the
-        # convergence signal, never the pair table itself
-        if edges.limit(1).count() == 0:
-            assign = io.checkpoint(assign, f"assign_iter_{i}")
-            continue
+        # an empty merge graph gets empty labels: every assignment stays
         labels = run_connected_components(
             edges, cfg, ckpt_dir=os.path.join(ckpt, f"cc_iter_{i}"))
         relabel = labels.select(
@@ -255,7 +257,7 @@ def merge_rematch(recs: DataFrame,
                           F.coalesce("_new", "cluster_id")
                           .alias("cluster_id")))
         # _SUCCESS-gated commit: the resume point for this iteration
-        assign = io.checkpoint(assign, f"assign_iter_{i}")
+        assign, _ = cut(assign, f"assign_iter_{i}", io=io)
     return assign
 
 

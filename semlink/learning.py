@@ -116,7 +116,7 @@ def fit_boosted_stumps(feats: DataFrame, feature_cols: list[str],
     scaled-bigint microunits (w9), so every Spark sum is an
     associative-exact integer — no float summation-order sensitivity;
     alpha derives from exact integer (err, total) on the driver; the
-    per-row weight update rounds back to bigint. localCheckpoint per
+    per-row weight update rounds back to bigint. An ``ops.cut`` per
     round cuts the growing lineage.
 
     Labels must be ±1. Returns [{rnd, f_idx, thr, polarity, alpha}].
@@ -126,14 +126,15 @@ def fit_boosted_stumps(feats: DataFrame, feature_cols: list[str],
         [(f, float(t)) for f in range(len(feature_cols))
          for t in thresholds],
         "f_idx int, thr double")
-    d = feats.select(
+    # the sample size is constant across rounds: the input cut counts it
+    d, seen = cut(feats.select(
         F.array(*[F.col(c).cast("double") for c in feature_cols]).alias("fx"),
         F.col(label_col).cast("int").alias("_y"),
         F.lit(10 ** 9).cast("bigint").alias("w9"),
-    ).localCheckpoint(eager=True)
+    ), "stump_sample")
+    n = seen["rows"]
 
     stumps: list[dict] = []
-    n = d.count()          # constant across rounds — one action, hoisted
     for rnd in range(rounds):
         x = F.element_at("fx", F.col("f_idx") + 1)
         pred = F.when(x > F.col("thr"), 1).otherwise(-1)

@@ -36,6 +36,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .ops import cut
+
 
 def block_pairs(recs: DataFrame, block_col: str, rec_id_col: str = "rec_id",
                 carry_cols: Sequence[str] = ()) -> DataFrame:
@@ -74,9 +76,9 @@ def sorted_neighborhood_pairs(recs: DataFrame, sort_col: str, window: int,
     space (the repo band rule)."""
     spark = recs.sparkSession
     n_parts = spark.sparkContext.defaultParallelism
-    ranked = (recs.repartitionByRange(n_parts, sort_col, rec_id_col)
-              .withColumn("_pid", F.spark_partition_id())
-              .localCheckpoint(eager=True))
+    ranked, _ = cut(recs.repartitionByRange(n_parts, sort_col, rec_id_col)
+                    .withColumn("_pid", F.spark_partition_id()),
+                    "sorted_neighborhood_ranked")
     counts = {r["_pid"]: r["c"] for r in
               ranked.groupBy("_pid").agg(F.count(F.lit(1)).alias("c"))
               .collect()}
@@ -212,10 +214,9 @@ def meta_blocking_pairs(blocks: DataFrame, rec_id_col: str = "rec_id",
     # cut the kept-block table once: it is consumed by FOUR subplans
     # (bl, nb, both self-join sides), each of which would otherwise
     # re-run the scheme union + purge (round-6; guide §2.4/§5)
-    kept_blocks = (blocks.withColumn(
+    kept_blocks, _ = cut(blocks.withColumn(
         "_bn", F.count(F.lit(1)).over(Window.partitionBy("bkey")))
-        .filter(F.col("_bn") <= max_block).drop("_bn")
-        .localCheckpoint(eager=True))
+        .filter(F.col("_bn") <= max_block).drop("_bn"), "meta_blocks")
     bl = kept_blocks.groupBy(rec_id_col).agg(
         F.count(F.lit(1)).alias("_bl"))
     nb = kept_blocks.select(F.count_distinct("bkey").alias("_nb"))

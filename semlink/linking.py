@@ -301,8 +301,7 @@ def attach_page_features(cands: DataFrame, pages: DataFrame) -> DataFrame:
 # ------------------------------------------------------------ context resolution
 
 def relatedness_table(page_links: DataFrame, entities: DataFrame,
-                      cfg: SemlinkConfig = DEFAULT, *,
-                      materialize: bool = True) -> DataFrame:
+                      cfg: SemlinkConfig = DEFAULT) -> DataFrame:
     """X6 precompute: Milne-Witten relatedness between entity pages
     (Milne & Witten CIKM'08, the measure the reference's context
     processor uses):
@@ -332,14 +331,9 @@ def relatedness_table(page_links: DataFrame, entities: DataFrame,
     # left-semi; then cut the capped table once — it feeds the size
     # aggregation AND both sides of the intersection self-join
     # (round-6; guide §2.4/§5)
-    il = (il.withColumn(
-            "_d", F.count(F.lit(1)).over(Window.partitionBy("src_id")))
-          .filter(F.col("_d") <= K).drop("_d"))
-    if materialize:
-        # ``materialize=False`` skips the cut — plan-audit only (the
-        # checkpoint truncates lineage to a LogicalRDD, hiding the
-        # LeftSemi entity reduction the audit asserts on)
-        il, _ = cut(il, "inlinks")
+    il, _ = cut(il.withColumn(
+                    "_d", F.count(F.lit(1)).over(Window.partitionBy("src_id")))
+                .filter(F.col("_d") <= K).drop("_d"), "inlinks")
     sizes = il.groupBy("e").agg(F.count(F.lit(1)).alias("n_in"))
     # N stays lazy: a 1-row aggregate cross-joined in (no driver action)
     n_df = page_links.select(

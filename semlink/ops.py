@@ -1,14 +1,15 @@
-"""Operational surfaces: the lineage cut, per-stage metrics and
-per-partition lineage (SURVEY O1-O2; north rule "per-partition lineage
-and metrics tables").
+"""Operational surfaces: the plan-shaping pair (lineage cut, narrow-input
+spread), per-stage metrics and per-partition lineage (SURVEY O1-O2;
+north rule "per-partition lineage and metrics tables").
 
 :func:`cut` is the one way the engine truncates lineage: an eager
-``localCheckpoint`` whose row count (and any extra aggregate) rides the
-same action as an ``Observation``. MetricsCollector gathers driver-side
-scalars (wall time per stage, row counts) cheaply — small aggregations
-only, never a collect of data rows. Lineage snapshots record
-rows-per-partition and source files per stage so a superstep can be
-audited after the fact.
+``localCheckpoint`` (or, given ``io``, a durable table commit) whose
+row count and any extra aggregate ride the same action as an
+``Observation``. :func:`spread` is the one way it repartitions a narrow
+input. MetricsCollector gathers driver-side scalars (wall time per
+stage, row counts) cheaply — small aggregations only, never a collect
+of data rows. Lineage snapshots record rows-per-partition and source
+files per stage so a superstep can be audited after the fact.
 """
 
 from __future__ import annotations
@@ -22,22 +23,51 @@ from pyspark.sql import functions as F
 from .io import TableIO
 
 
-def cut(df: DataFrame, name: str, *aggs: Column) -> tuple[DataFrame, dict]:
-    """Materialize ``df`` with an eager ``localCheckpoint`` and return
-    ``(cut_df, seen)``: ``seen["rows"]`` is its row count and each
-    extra aggregate in ``aggs`` appears under its alias. The counts ride
-    the checkpoint's own action, so no separate count job runs.
+def cut(df: DataFrame, name: str, *aggs: Column,
+        io: TableIO | None = None) -> tuple[DataFrame, dict]:
+    """Materialize ``df`` and return ``(cut_df, seen)``: ``seen["rows"]``
+    is its row count and each extra aggregate in ``aggs`` appears under
+    its alias. The counts ride the materializing action, so no separate
+    count job runs.
 
-    Every later query over ``cut_df`` plans a ``LogicalRDD`` leaf
-    instead of the whole upstream tree, and nothing enters Spark's
-    CacheManager. The blocks live on the executors that computed them:
-    a lost executor fails the query that reads them rather than
-    recomputing (local checkpoints keep no lineage). Durable, resumable
-    commits are the CC superstep tables (``cluster.py``)."""
+    Every later query over ``cut_df`` plans a leaf instead of the whole
+    upstream tree, and nothing enters Spark's CacheManager. By default
+    the cut is an eager ``localCheckpoint``, whose blocks live on the
+    executors that computed them: a lost executor fails the query that
+    reads them rather than recomputing. With ``io`` it is the table
+    ``name`` written and read back, which a resumed run can restart
+    from: parquet's ``_SUCCESS`` marker (Iceberg's atomic snapshot
+    commit) is the gate, so a killed write leaves a step resume treats
+    as absent (SURVEY C5)."""
     obs = Observation(name)
-    out = (df.observe(obs, F.count(F.lit(1)).alias("rows"), *aggs)
-           .localCheckpoint(eager=True))
-    return out, obs.get
+    observed = df.observe(obs, F.count(F.lit(1)).alias("rows"), *aggs)
+    if io is None:
+        return observed.localCheckpoint(eager=True), obs.get
+    io.write(observed, name)
+    return io.read(df.sparkSession, name), obs.get
+
+
+def spread(df: DataFrame, n: int, *keys: str) -> DataFrame:
+    """Repartition a NARROW input to ``n`` partitions — by ``keys`` if
+    given, else round-robin — and return a wide one untouched.
+
+    For compute-dense consumers (n-gram explodes, media decode,
+    quadratic blocking joins) of a small scan that arrives as one or
+    two splits and would otherwise run the whole expensive stage on
+    that many tasks (guide §2.5 input skew / §6 input split size). An
+    input with at least ``n`` partitions (the at-scale case) is never
+    shrunk and never pays the exchange. Keys let a downstream window or
+    aggregate keyed the same way reuse this one exchange (guide §2.4);
+    adjacent repartitions collapse, so a spread over a spread costs one.
+
+    A shuffled input counts as narrow: AQE picks its width at run time
+    (a small-byte shuffle coalesces to one partition), and asking
+    ``df.rdd`` would run its upstream stages to find out."""
+    adaptive = (df._jdf.queryExecution().executedPlan().nodeName()
+                == "AdaptiveSparkPlan")
+    if not adaptive and df.rdd.getNumPartitions() >= n:
+        return df
+    return df.repartition(n, *keys)
 
 
 class MetricsCollector:

@@ -31,7 +31,7 @@ from .cluster import cluster_assignments, pairwise_f1, run_connected_components
 from .config import DEFAULT, SemlinkConfig
 from .io import TableIO
 from .linking import link_transcripts
-from .ops import MetricsCollector, cut
+from .ops import MetricsCollector, cut, spread
 from .pairs import edges_from_scores, mention_pairs, score_pairs
 
 
@@ -58,9 +58,8 @@ def run_pipeline(
     # evidence: generate_mentions 2 Exchange -> 1; guide §2.4 — the
     # shuffle that disappears is ~token-count-sized, the one that
     # remains is the turn-count-sized input).
-    if transcripts.rdd.getNumPartitions() < cfg.shuffle_partitions:
-        transcripts = transcripts.repartition(
-            cfg.shuffle_partitions, "conv_id", "turn_idx")
+    transcripts = spread(transcripts, cfg.shuffle_partitions,
+                         "conv_id", "turn_idx")
 
     # each layer's output is cut (module docstring); its row count
     # rides the cut's own action

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..ops import spread
+
 SCALE = 1_000_000
 
 
@@ -36,16 +38,20 @@ def _r6(col):
     return F.round(col * SCALE).cast("bigint")
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # spread: the documents table is one small scan split at bench
-    # scale, and nearly every consumer runs a compute-dense stage
-    # directly on the scan partitioning (shingle/n-gram explode, Arrow
-    # media decode, regex batteries) — see _spread. Consumers whose
-    # work does NOT amortize the extra exchange (single explode +
-    # one map-side-combined groupBy) read via _docs_raw instead
-    # (round-6 PERF diff vs r05: only langid / lang_mix / minhash
-    # signatures paid more than they gained).
-    return _spread(_docs_raw(spark, sf_dir))
+def _cores(spark: SparkSession) -> int:
+    return spark.sparkContext.defaultParallelism
+
+
+def _docs(spark: SparkSession, sf_dir: str, *keys: str) -> DataFrame:
+    # spread (ops.spread, keyed by ``keys`` if given): the documents
+    # table is one small scan split at bench scale, and nearly every
+    # consumer runs a compute-dense stage directly on the scan
+    # partitioning (shingle/n-gram explode, Arrow media decode, regex
+    # batteries). Consumers whose work does NOT amortize the extra
+    # exchange (single explode + one map-side-combined groupBy) read
+    # via _docs_raw instead (round-6 PERF diff vs r05: only langid /
+    # lang_mix / minhash signatures paid more than they gained).
+    return spread(_docs_raw(spark, sf_dir), _cores(spark), *keys)
 
 
 def _docs_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -54,33 +60,6 @@ def _docs_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _read(spark, sf_dir, name):
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _spread(df: DataFrame, *cols: str) -> DataFrame:
-    """Round-robin repartition to cluster parallelism when the input
-    has fewer partitions — for compute-dense operators (n-gram
-    explodes, media decode, quadratic blocking joins) whose input is a
-    single small scan split at bench scale, which would otherwise run
-    the whole expensive stage on 1-2 tasks (guide §2.5 input skew /
-    §6 input split size). No-op when the scan already yields at least
-    cluster-parallelism splits (the at-scale case), so the narrow
-    input is never shuffled where real split parallelism exists.
-
-    ``cols`` switches to a KEYED repartition — used when a downstream
-    window partitions by those columns, so the window reuses this one
-    exchange instead of re-shuffling its (much larger) exploded input
-    (guide §2.4; adjacent repartitions collapse, so layering this on
-    an already-_spread input still costs one exchange)."""
-    spark = df.sparkSession
-    p = spark.sparkContext.defaultParallelism
-    if cols:
-        return df.repartition(p, *cols)
-    try:
-        if df.rdd.getNumPartitions() >= p:
-            return df
-    except Exception:
-        pass
-    return df.repartition(p)
 
 
 REGISTRY: dict[str, tuple] = {}

@@ -5,7 +5,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..datapipe import simsearch as ss
-from . import SCALE, _docs, _r6, _read, _spread, q
+from ..ops import spread
+from . import SCALE, _cores, _docs, _r6, _read, q
 
 
 _COSINE_SQL = """
@@ -27,7 +28,7 @@ _COSINE_SQL = """
   WHERE rk <= 5
 """)
 def ann_brute_force_topk(spark, sf_dir):
-    e = _spread(_read(spark, sf_dir, "embeddings"))
+    e = spread(_read(spark, sf_dir, "embeddings"), _cores(spark))
     q_ = (e.filter(F.col("vec_id") < 25)
           .select(F.col("vec_id").alias("query_id"),
                   F.col("embedding").alias("q_emb")))
@@ -78,7 +79,7 @@ def ann_ivf_cell_topk(spark, sf_dir):
     """Real IVF: deterministic seed centroids (k lowest-id vectors),
     cosine argmax cell assignment, then cell-restricted search — the
     whole index path is oracle-verified, not a fixture-label stand-in."""
-    e = _spread(_read(spark, sf_dir, "embeddings"))
+    e = spread(_read(spark, sf_dir, "embeddings"), _cores(spark))
     cents = ss.seed_centroids(e, k=_IVF_K)
     a = ss.assign_cells(e.select("vec_id", "embedding"), cents, "vec_id",
                         nprobe=1)
@@ -142,7 +143,7 @@ def ann_kmeans_centroids(spark, sf_dir):
     oracle-verified: DuckDB re-runs both iterations — deterministic
     seed centroids, argmax-cosine assignment, scaled-bigint centroid
     averaging, empty-cell carry-over — element by element."""
-    e = _spread(_read(spark, sf_dir, "embeddings"))
+    e = spread(_read(spark, sf_dir, "embeddings"), _cores(spark))
     c = ss.kmeans_centroids(e, k=_KM_K, iters=2)
     return (c.select("cell", F.posexplode("c_emb").alias("pos", "m"))
             .select("cell", F.col("pos").cast("bigint").alias("pos"),
@@ -194,7 +195,7 @@ def ann_ivf_near_dup_edges(spark, sf_dir):
     near-dup set is non-trivial; the oracle re-derives the probe sets,
     the candidate-pair dedup, and every surviving edge — the IVF
     routing must recover every planted twin through a shared cell."""
-    e = _spread(_read(spark, sf_dir, "embeddings"))
+    e = spread(_read(spark, sf_dir, "embeddings"), _cores(spark))
     base = e.select("vec_id", F.transform(
         "embedding", lambda x: x.cast("double")).alias("embedding"))
     twins = (e.filter(F.col("vec_id") < 100)
@@ -243,7 +244,7 @@ _EMB_ARR = ", ".join(
   filled AS (SELECT d.doc_id, {_EMB_COAL}
              FROM documents d LEFT JOIN agg USING (doc_id)),
   withss AS (SELECT *, CAST({_EMB_SS} AS BIGINT) AS ss FROM filled)
-  SELECT doc_id, ss, [{_EMB_ARR}] AS emb6
+  SELECT doc_id, ss, array_to_string([{_EMB_ARR}], ',') AS emb6
   FROM withss
 """)
 def ann_embed_text(spark, sf_dir):
@@ -253,7 +254,9 @@ def ann_embed_text(spark, sf_dir):
     L2-normalized scaled-bigint components. embed_text() exposes the
     same vectors as array<float> for the ANN operators; composition
     (embed → IVF near-dup edges on planted paraphrase twins) is
-    pytest-pinned."""
+    pytest-pinned. ``emb6`` is the comma-joined component list: a
+    scalar, because a list column is unhashable for a row-hashing
+    consumer of the contract."""
     c = ss.hashed_embedding_components(_docs(spark, sf_dir))
     norm = F.sqrt(F.col("ss").cast("double"))
     emb6 = F.array(*[
@@ -261,7 +264,8 @@ def ann_embed_text(spark, sf_dir):
                F.round(F.col(f"v{j}").cast("double") / norm * SCALE)
                .cast("bigint"))
         .otherwise(F.lit(0).cast("bigint")) for j in range(EMBED_DIM)])
-    return c.select("doc_id", "ss", emb6.alias("emb6"))
+    return c.select("doc_id", "ss", F.array_join(
+        emb6.cast("array<string>"), ",").alias("emb6"))
 
 
 # ---------------------------------------------------- product quantization
@@ -342,7 +346,7 @@ def ann_pq_codes(spark, sf_dir):
     exactly like ann_kmeans_centroids. Registry + pytest + oracle
     verified on demand; demoted from the driver window (see
     __spark_entry__)."""
-    e = _spread(_read(spark, sf_dir, "embeddings"))
+    e = spread(_read(spark, sf_dir, "embeddings"), _cores(spark))
     cb = ss.pq_codebooks(e, dim=_PQ_DIM, m=_PQ_M, k=_PQ_K,
                          iters=_PQ_ITERS)
     return ss.pq_codes(e, cb, dim=_PQ_DIM, m=_PQ_M)
@@ -391,7 +395,7 @@ def ann_pq_adc_topk(spark, sf_dir):
     re-runs the full four-subspace Lloyd fit AND the LUT search in
     SQL. Registry + pytest + oracle verified on demand; demoted from
     the driver window (see __spark_entry__)."""
-    e = _spread(_read(spark, sf_dir, "embeddings"))
+    e = spread(_read(spark, sf_dir, "embeddings"), _cores(spark))
     cb = ss.pq_codebooks(e, dim=_PQ_DIM, m=_PQ_M, k=_PQ_K,
                          iters=_PQ_ITERS)
     q_ = (e.filter(F.col("vec_id") < 25)
@@ -443,6 +447,6 @@ def ann_ivfpq_codes(spark, sf_dir):
     (cell, code, error) hash-matches. Registry + pytest + oracle
     verified on demand; demoted from the driver window (see
     __spark_entry__)."""
-    e = _spread(_read(spark, sf_dir, "embeddings"))
+    e = spread(_read(spark, sf_dir, "embeddings"), _cores(spark))
     return ss.ivfpq_codes(e, dim=_PQ_DIM, coarse_k=_IVFPQ_COARSE_K,
                           m=_PQ_M, k=_PQ_K, iters=_PQ_ITERS)

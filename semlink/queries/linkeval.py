@@ -23,7 +23,8 @@ from ..linkeval import (EM_EPS, EM_INIT, EM_ITERS, block_pairs,
                         fs_em_posterior_expr, fs_score,
                         meta_blocking_pairs, scheme_blocks,
                         sorted_neighborhood_pairs)
-from . import _read, q
+from ..ops import cut, spread
+from . import _cores, _read, q
 
 # Corruption moduli — shared verbatim with the oracle SQL below.
 _DUP_MOD = 3        # every third customer gets a duplicate record
@@ -141,8 +142,7 @@ def _labeled_pairs(spark, sf_dir):
     # count/rank-cheap and only pay the extra shuffle (A/B'd +0.4-0.8 s
     # each).
     recs = _records(spark, sf_dir)
-    spread = recs.repartition(spark.sparkContext.defaultParallelism)
-    pairs = block_pairs(spread, "nat",
+    pairs = block_pairs(spread(recs, _cores(spark)), "nat",
                         carry_cols=("ent_id", "name", "seg", "bal_cents"))
     return recs, pairs.select(
         "rec_l", "rec_r",
@@ -266,12 +266,12 @@ def rl_fellegi_sunter(spark, sf_dir):
     # job is the final per-pair scoring. The driver-side Laplace
     # division reproduces fs_estimate_weights / the oracle's
     # CAST(..)/CAST(..) bit-for-bit (exact integers, one IEEE divide).
-    # localCheckpoint (not a parquet materialization, which round 5
+    # a local cut (not a parquet materialization, which round 5
     # measured slower) computes the pair table once and serves both
     # the histogram action and the scoring pass from memory — the
     # blocking join + banded levenshtein no longer run twice
     # (guide §5 caching: reused AND expensive to recompute).
-    lab = lab.localCheckpoint(eager=True)
+    lab, _ = cut(lab, "fs_pairs")
     hrows = (lab.groupBy(*[F.col(f) for f in _FIELDS], "is_match")
              .agg(F.count(F.lit(1)).alias("c")).collect())
     nm = sum(r["c"] for r in hrows if r["is_match"] == 1)

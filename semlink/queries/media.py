@@ -4,7 +4,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..datapipe.multimodal import extract_media_features, synthesize_media
-from . import SCALE, _docs, _r6, _spread, q
+from . import SCALE, _docs, _r6, q
 
 
 _MEDIA_DIMS_SQL = """
@@ -35,7 +35,7 @@ def media_features(spark, sf_dir):
     a decode bug (endianness, offset, color-type map) fails the hash."""
     # spread the single-split scan so the Arrow decode runs on all
     # cores, not 1 task (guide §2.5/§6)
-    media = synthesize_media(_spread(_docs(spark, sf_dir)))
+    media = synthesize_media(_docs(spark, sf_dir))
     return extract_media_features(media).select(
         "media_id", "kind", "n_bytes", "fmt", "width", "height", "channels")
 
@@ -71,7 +71,7 @@ def media_pixels(spark, sf_dir):
     and hashes the ENTIRE reconstructed sample stream (px_digest =
     md5(hex(pixels))), so any inflate/unfilter/stride/interleave bug
     hash-mismatches. mean6 is the exact channel-average."""
-    media = synthesize_media(_spread(_docs(spark, sf_dir)))
+    media = synthesize_media(_docs(spark, sf_dir))
     from ..datapipe.multimodal import extract_pixel_stats
     return (extract_pixel_stats(media)
             .select("media_id", "n_px", _r6(F.col("mean")).alias("mean6"),
@@ -112,7 +112,7 @@ def media_audio(spark, sf_dir):
     generator parameters, so an endianness, chunk-walk, or
     sample-width bug hash-mismatches."""
     from ..datapipe.multimodal import extract_audio_stats, synthesize_audio
-    media = synthesize_audio(_spread(_docs(spark, sf_dir)))
+    media = synthesize_audio(_docs(spark, sf_dir))
     return (extract_audio_stats(media)
             .select("media_id", "n_samples",
                     _r6(F.col("mean")).alias("mean6"), "digest"))

@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from ..ngrams import explode_mentions, ngram_duckdb_sql
 from ..textnorm import soundex_duckdb_sql
-from . import SCALE, _docs, _r6, _read, _spread, q
+from . import SCALE, _docs, _r6, _read, q
 
 
 _TOK_SQL = """
@@ -23,7 +23,7 @@ def rl_ngram_explode(spark, sf_dir):
     # keyed spread: the explode's lead-window partitions by conv_id,
     # so one doc_id-keyed exchange serves both parallelism and the
     # window (2 Exchange -> 1; guide §2.4/§2.5)
-    d = _spread(_docs(spark, sf_dir), "doc_id") \
+    d = _docs(spark, sf_dir, "doc_id") \
         .withColumnRenamed("doc_id", "conv_id")
     m = explode_mentions(d, key_cols=("conv_id",), max_n=3)
     return m.select(F.col("conv_id").alias("doc_id"),
@@ -44,7 +44,7 @@ _DICT_SQL = f"""
 """
 
 def _spark_dict(spark, sf_dir):
-    d = _spread(_docs(spark, sf_dir))
+    d = _docs(spark, sf_dir)
     toks = d.select(
         "doc_id", "source",
         F.explode(F.array_remove(F.split(F.trim("text"), r"\s+"), "")).alias("anchor_norm"))
@@ -81,7 +81,7 @@ def rl_link_top1(spark, sf_dir):
     top1 = (dict_df.withColumn("rk", F.row_number().over(w))
             .filter(F.col("rk") == 1)
             .select("anchor_norm", F.col("sense").alias("top_sense"), "prior6"))
-    d = _spread(_docs(spark, sf_dir))
+    d = _docs(spark, sf_dir)
     toks = d.select(
         "doc_id",
         F.explode(F.array_remove(F.split(F.trim("text"), r"\s+"), "")).alias("token"))
@@ -108,7 +108,7 @@ _MENTIONS12_SQL = ngram_duckdb_sql("documents", "doc_id", "text", 2)
 """)
 def rl_largest_matching(spark, sf_dir):
     from ..linking import largest_matching_filter
-    d = _spread(_docs(spark, sf_dir), "doc_id") \
+    d = _docs(spark, sf_dir, "doc_id") \
         .withColumnRenamed("doc_id", "conv_id") \
         .withColumn("turn_idx", F.lit(0))
     m = explode_mentions(d, key_cols=("conv_id", "turn_idx"), max_n=2)
@@ -133,7 +133,7 @@ _PAIR_MENTIONS_SQL = f"""
   WHERE r.rk > l.rk AND r.rk - l.rk <= 3
 """)
 def rl_mention_pairs(spark, sf_dir):
-    d = _spread(_docs(spark, sf_dir))
+    d = _docs(spark, sf_dir)
     m = (d.select("doc_id",
                   F.explode(F.array_remove(F.split(F.trim("text"), r"\s+"), ""))
                   .alias("token"))

@@ -48,8 +48,8 @@ def get_spark(
         # costs comparable task-scheduling overhead on multi-stage
         # small queries (rl_golden_record +0.4 s, rl_meta_blocking
         # +0.5-2 s). CPU-dense operators that need guaranteed fan-out
-        # use an explicit repartition instead (queries._spread,
-        # cosine_near_dup_edges_ivf).
+        # use an explicit repartition instead (ops.spread, and the
+        # cell-keyed one in cosine_near_dup_edges_ivf).
         # Arrow transport for the two pandas-UDF kernels (SURVEY §2.7)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")

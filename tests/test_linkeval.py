@@ -361,6 +361,25 @@ def test_merge_rematch_resume_from_committed_iteration(spark, tmp_path):
         str(tmp_path / "rs_part" / "assign_iter_1.parquet" / "_SUCCESS"))
 
 
+def test_merge_rematch_fresh_run_keeps_foreign_files(spark, tmp_path):
+    """A fresh run clears only the iterations an earlier run committed
+    (a stale higher iteration would poison a later resume), never
+    other files in the caller's checkpoint dir."""
+    recs = _mr_fixture(spark)
+    schemes = [lambda df: F.col("nat").cast("string"),
+               lambda df: F.lit("all")]
+    ckpt = tmp_path / "mr_foreign"
+    (ckpt / "assign_iter_9.parquet").mkdir(parents=True)
+    (ckpt / "assign_iter_9.parquet" / "_SUCCESS").write_text("")
+    (ckpt / "sentinel.txt").write_text("keep")
+    got = sorted(_mr_run(spark, recs, schemes, tmp_path,
+                         "mr_foreign").collect())
+    assert (ckpt / "sentinel.txt").read_text() == "keep"
+    assert not (ckpt / "assign_iter_9.parquet").exists()
+    assert got == sorted(_mr_run(spark, recs, schemes, tmp_path,
+                                 "mr_clean").collect())
+
+
 # -------------------------------------------------- incremental link
 
 def test_incremental_link_best_match_and_singletons(spark):

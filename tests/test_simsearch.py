@@ -381,3 +381,23 @@ def test_ivfpq_matches_numpy_mirror(spark):
         for i in range(len(sub)):
             code = min(range(k), key=lambda c: (d2[c][i], c))
             assert got[(i, j)] == (cell_of[i], code, int(d2[code][i])), (i, j)
+
+
+def test_ann_embed_text_rows_are_hashable(spark, tmp_path):
+    """The registry entry emits only scalar columns: a collected frame
+    sorts over every column (a list column is unhashable), and emb6
+    carries all EMBED_DIM scaled components, comma-joined."""
+    from semlink.datapipe.simsearch import EMBED_DIM
+    from semlink.queries.ann import ann_embed_text
+    spark.createDataFrame(
+        [(1, "the quick brown fox"), (2, "the quick brown fox"),
+         (3, "lazy dogs sleep all day"), (4, None), (5, "")],
+        "doc_id long, text string",
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    pdf = ann_embed_text(spark, str(tmp_path)).toPandas()
+    pdf = pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
+    assert list(pdf["doc_id"]) == [1, 2, 3, 4, 5]
+    comps = [[int(x) for x in e.split(",")] for e in pdf["emb6"]]
+    assert all(len(c) == EMBED_DIM for c in comps)
+    assert comps[0] == comps[1] and any(comps[0])
+    assert comps[3] == comps[4] == [0] * EMBED_DIM

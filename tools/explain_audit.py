@@ -19,7 +19,7 @@ import io
 import os
 import sys
 import tempfile
-from contextlib import redirect_stdout
+from contextlib import contextmanager, redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -31,6 +31,19 @@ def formatted(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+@contextmanager
+def uncut(module):
+    """Swap an identity ``cut`` into ``module`` while a plan is built: a
+    real cut truncates lineage to a LogicalRDD, which hides the
+    operators a check asserts on. A test fake, not an engine option."""
+    real = module.cut
+    module.cut = lambda df, name, *aggs, io=None: (df, {})
+    try:
+        yield
+    finally:
+        module.cut = real
 
 
 def main():
@@ -115,12 +128,12 @@ def main():
                    and lp5b.startswith("LogicalRDD")))
 
     # 6. relatedness self-join is capped + aggregated with partial aggs
+    import semlink.linking
     from semlink.linking import relatedness_table
-    # materialize=False: the round-6 localCheckpoint of the capped
-    # inlink table truncates lineage to a LogicalRDD, which would hide
-    # the LeftSemi entity reduction this check asserts on
-    p6 = formatted(relatedness_table(fx["page_links"], anchors,
-                                     materialize=False))
+    # uncut: the cut of the capped inlink table would hide the
+    # LeftSemi entity reduction this check asserts on
+    with uncut(semlink.linking):
+        p6 = formatted(relatedness_table(fx["page_links"], anchors))
     sections["MW relatedness (X6)"] = p6
     checks.append(("relatedness fan-out cap applied (LeftSemi before join)",
                    "LeftSemi" in p6))
@@ -320,14 +333,16 @@ def main():
                    and "ArrowEvalPython" not in p19
                    and _nodes(p19, "BroadcastNestedLoopJoin") <= 1))
 
-    # 20. PageRank: ONE un-checkpointed iteration's plan (real runs
-    # sever lineage per superstep) — every rank/edge/out-degree join
+    # 20. PageRank: ONE uncut iteration's plan (real runs cut lineage
+    # per superstep) — every rank/edge/out-degree join
     # is an equi join; nested loops only for the 1-row N / dangling
     # broadcasts; integer expressions, no Python
+    import semlink.graphrank
     from semlink.graphrank import pagerank
     from semlink.queries.rlcov import _spark_page_graph
     pl_edges, _pg = _spark_page_graph(spark, sf)
-    p20 = formatted(pagerank(pl_edges, iters=1, checkpoint=False))
+    with uncut(semlink.graphrank):
+        p20 = formatted(pagerank(pl_edges, iters=1))
     sections["PageRank prior (one superstep)"] = p20
     checks.append(("pagerank: equi joins, 1-row-only nested loops, "
                    "JVM-only",
