@@ -20,8 +20,9 @@ class SemlinkConfig:
     # --- text / mention generation (SURVEY T1-T4) ---
     max_ngram_len: int = 3                 # reference `max_ngram_length`
     # full-Unicode blocking keys via the Arrow pandas-UDF normalizer
-    # (textnorm.normalize_unicode_udf) — for CJK/non-Latin corpora;
-    # default False keeps the pure-codegen ASCII path
+    # (textnorm.normalize_unicode_udf per token in batch, its array form
+    # once per turn in streaming) — for CJK/non-Latin corpora; default
+    # False keeps the pure-codegen ASCII path
     unicode_normalize: bool = False
 
     # --- candidate filters (SURVEY F1-F4) ---

@@ -26,8 +26,9 @@ the rank mass stays within N*2 units of S per iteration.
 Scale shape: per iteration ONE equi join of ranks onto edges (both
 sides partitioned by src; a hot hub fans out to its out-edges —
 bounded by max out-degree, and AQE skew-join splits hot sources), one
-map-side-combined groupBy(dst), a 1-row dangling aggregate and a
-1-row N broadcast. K iterations = K such rounds, each ended by an
+map-side-combined groupBy(dst) and a 1-row dangling aggregate; N is
+the row count the node-table cut observed, a literal in every rank
+expression. K iterations = K such rounds, each ended by an
 ``ops.cut`` of the rank table, as cluster.py's connected components
 cut each superstep.
 """
@@ -52,14 +53,15 @@ def pagerank(edges: DataFrame, iters: int = 3,
     e, _ = cut(edges.select(F.col(src_col).alias("src_id"),
                             F.col(dst_col).alias("dst_id")).distinct(),
                "pagerank_edges")
-    nodes, _ = cut(e.select(F.col("src_id").alias("id"))
-                   .union(e.select(F.col("dst_id").alias("id"))).distinct(),
-                   "pagerank_nodes")
+    nodes, seen = cut(e.select(F.col("src_id").alias("id"))
+                      .union(e.select(F.col("dst_id").alias("id")))
+                      .distinct(), "pagerank_nodes")
+    n = seen["rows"]
+    if n == 0:
+        return nodes.select("id", F.lit(0).cast("long").alias("pr9"))
     outd, _ = cut(e.groupBy("src_id").agg(
         F.count(F.lit(1)).cast("long").alias("outdeg")), "pagerank_outdeg")
-    nn = nodes.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    r = (nodes.crossJoin(nn)
-         .select("id", F.expr(f"{SCALE9} div n").alias("pr9")))
+    r = nodes.select("id", F.lit(SCALE9 // n).cast("long").alias("pr9"))
     for _ in range(iters):
         contrib = (r.join(e, r["id"] == e["src_id"])
                    .join(outd, "src_id")
@@ -72,10 +74,10 @@ def pagerank(edges: DataFrame, iters: int = 3,
                      .alias("dang")))
         r = (nodes.join(insum, "id", "left")
              .na.fill(0, ["in_sum"])
-             .crossJoin(dang).crossJoin(nn)
+             .crossJoin(dang)
              .select("id",
-                     F.expr(f"{15 * SCALE9} div (n * 100)"
-                            " + (85 * (in_sum + dang div n)) div 100")
+                     F.expr(f"{15 * SCALE9 // (n * 100)}"
+                            f" + (85 * (in_sum + dang div {n})) div 100")
                      .cast("long").alias("pr9")))
         # sever lineage per superstep (the CC family's checkpoint
         # discipline): the rank table is referenced TWICE next

@@ -66,9 +66,11 @@ def sorted_neighborhood_pairs(recs: DataFrame, sort_col: str, window: int,
     the lower-RANK record, so each pair appears exactly once.
 
     Scale shape: the global rank is two-phase (range-repartition →
-    local row_number + driver prefix-sum of per-partition counts,
-    broadcast back) — no SinglePartition exchange; the rank result is
-    invariant to where the range cuts land. The rank-adjacency
+    local row_number + the prefix sum of per-partition counts, a
+    window over one row per partition, broadcast back on the partition
+    id) — only that tiny count table crosses a SinglePartition
+    exchange; the rank result is invariant to where the range cuts
+    land, and the plan does not depend on the data. The rank-adjacency
     predicate is then a BANDED EQUI JOIN: block = (rn-1) div window,
     the right side replicated to its own and its predecessor block,
     so each row meets at most 2·window candidates before the rank
@@ -79,23 +81,16 @@ def sorted_neighborhood_pairs(recs: DataFrame, sort_col: str, window: int,
     ranked, _ = cut(recs.repartitionByRange(n_parts, sort_col, rec_id_col)
                     .withColumn("_pid", F.spark_partition_id()),
                     "sorted_neighborhood_ranked")
-    counts = {r["_pid"]: r["c"] for r in
-              ranked.groupBy("_pid").agg(F.count(F.lit(1)).alias("c"))
-              .collect()}
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    if offsets:
-        off = F.element_at(
-            F.create_map(*[F.lit(x) for pid in sorted(offsets)
-                           for x in (pid, offsets[pid])]),
-            F.col("_pid")).cast("long")
-    else:
-        off = F.lit(0).cast("long")
+    # per-partition rank offsets in-plan: the running sum of the
+    # per-_pid counts (≤ n_parts rows on one task), broadcast back by _pid
+    offs = (ranked.groupBy("_pid").agg(F.count(F.lit(1)).alias("c"))
+            .select("_pid", F.coalesce(F.sum("c").over(
+                Window.orderBy("_pid").rowsBetween(
+                    Window.unboundedPreceding, -1)), F.lit(0))
+                .cast("long").alias("_off")))
     w_local = Window.partitionBy("_pid").orderBy(sort_col, rec_id_col)
-    rn = (ranked.withColumn(
-        "_rn", F.row_number().over(w_local).cast("long") + off)
+    rn = (ranked.join(F.broadcast(offs), "_pid").withColumn(
+        "_rn", F.row_number().over(w_local).cast("long") + F.col("_off"))
         .withColumn("_blk", F.floor((F.col("_rn") - 1) / window)))
 
     left = rn.select(

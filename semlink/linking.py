@@ -41,28 +41,9 @@ from .textnorm import clean_expr
 
 # ------------------------------------------------------------ mentions
 
-def _first_word_gate(m: DataFrame, first_words,
-                     gate_col: str = "ngram_norm") -> DataFrame:
-    """Post-explode form of the F4 first-word gate: keep mentions whose
-    ``gate_col``'s first word starts some anchor. Used where the gate
-    must run AFTER the blocking key exists (the streaming-unicode path
-    re-derives ngram_norm post-explode, so gating inside the explode
-    would test ASCII-folded '' keys and drop every CJK mention —
-    ADVICE r02)."""
-    gate = F.split(F.col(gate_col), " ").getItem(0)
-    if isinstance(first_words, DataFrame):
-        g = first_words.select(
-            F.col(first_words.columns[0]).alias("_fw")).distinct()
-        return m.join(F.broadcast(g), gate == F.col("_fw"), "left_semi")
-    fw = sorted({w for w in first_words if w})
-    if not fw:
-        return m.filter(F.lit(False))
-    return m.filter(gate.isin(fw))
-
-
 def generate_mentions(transcripts: DataFrame,
                       cfg: SemlinkConfig = DEFAULT,
-                      first_words: list[str] | None = None,
+                      first_words: DataFrame | None = None,
                       streaming: bool = False,
                       carry_cols: tuple[str, ...] = ()) -> DataFrame:
     """T1-T4 + T3: transcript turns → candidate mentions.
@@ -81,51 +62,18 @@ def generate_mentions(transcripts: DataFrame,
         "conv_id", "turn_idx", *carry_cols,
         clean_expr(F.col("text")).alias("text"),
     )
+    kwargs = {}
     if streaming:
-        m = explode_mentions_hof(
-            t, text_col="text", key_cols=("conv_id", "turn_idx"),
-            max_n=cfg.max_ngram_len,
-            # with unicode_normalize the in-explode gate would test
-            # ASCII-folded keys ('' for CJK) — gate after re-derivation
-            first_words=None if cfg.unicode_normalize else first_words,
-            carry_cols=carry_cols,
-            keep_empty_norm=cfg.unicode_normalize)
         if cfg.unicode_normalize:
-            # pandas UDFs can't run inside the HOF array transform, so
-            # the streaming path re-derives the blocking key from the
-            # raw ngram post-explode. Whole-string == tokenwise-joined
-            # normalization (deletion + collapse is homomorphic over
-            # space-joined concat; tests pin CJK goldens both ways).
-            from .textnorm import normalize_unicode_udf
-            m = (m.withColumn("ngram_norm",
-                              normalize_unicode_udf(F.col("ngram")))
-                 .filter(F.col("ngram_norm") != ""))
-            if first_words is not None:
-                # BATCH gates on the span's OWN leading normalized
-                # token ('' for punctuation-only leads → dropped), not
-                # on the first word of the collapsed whole-ngram key —
-                # so gate here on the unicode-normalized leading RAW
-                # token for identical batch/streaming mention sets
-                # (ADVICE r03; punctuation-led CJK span pinned in
-                # tests/test_streaming.py). Known cost: this is a
-                # SECOND pandas-UDF pass over the exploded mentions on
-                # top of the whole-ngram one — unavoidable in
-                # streaming (a distinct-lead-token reduction would
-                # need stateful distinct, and pandas UDFs can't run
-                # inside the HOF explode); micro-batches are small, so
-                # the extra Arrow round trip is bounded per trigger.
-                m = (m.withColumn(
-                        "_lead_norm",
-                        normalize_unicode_udf(
-                            F.split(F.col("ngram"), " ").getItem(0)))
-                     .transform(lambda d: _first_word_gate(
-                         d, first_words, gate_col="_lead_norm"))
-                     .drop("_lead_norm"))
-        return m
+            from .textnorm import normalize_unicode_tokens_udf
+            kwargs["norm_tokens_fn"] = normalize_unicode_tokens_udf
+        return explode_mentions_hof(
+            t, text_col="text", key_cols=("conv_id", "turn_idx"),
+            max_n=cfg.max_ngram_len, first_words=first_words,
+            carry_cols=carry_cols, **kwargs)
     if carry_cols:
         raise ValueError("carry_cols is a streaming-only feature "
                          "(batch joins on mention_id instead)")
-    kwargs = {}
     if cfg.unicode_normalize:
         from .textnorm import normalize_unicode_udf
         kwargs["norm_fn"] = normalize_unicode_udf
@@ -135,29 +83,14 @@ def generate_mentions(transcripts: DataFrame,
                             first_words=first_words, **kwargs)
 
 
-def anchor_first_words(anchors: DataFrame,
-                       max_set_size: int = 50_000):
-    """Distinct first tokens of all anchor keys, for the explode gate.
-
-    Small dictionaries → a Python list compiled to an O(1) literal
-    InSet probe inside the explode. Dictionaries with more distinct
-    anchors than ``max_set_size`` → a DataFrame(first_word) gate that
-    explode_mentions applies as a broadcast LEFT SEMI join — the gate
-    never silently disappears at Wikipedia scale (VERDICT r01
-    missing #4); only its physical form changes."""
-    fw = (anchors
-          .select(F.split("anchor_norm", " ").getItem(0).alias("w"))
-          .filter(F.col("w") != "").distinct())
-    # ONE bounded job decides the gate form AND fetches the set: a
-    # limit(max+1) collect is complete whenever it returns <= max rows.
-    # The InSet compilation bound is the FIRST-WORD set size (what the
-    # literal list holds), so sizing on it rather than on the distinct
-    # anchor count is both cheaper (no separate full-distinct count
-    # job per link call) and the tighter criterion (round-6).
-    rows = fw.limit(max_set_size + 1).collect()
-    if len(rows) > max_set_size:
-        return fw
-    return [r.w for r in rows]
+def anchor_first_words(anchors: DataFrame) -> DataFrame:
+    """Distinct first words of all anchor keys, for the explode gate:
+    a one-column DataFrame(w) that both explodes apply as a broadcast
+    LEFT SEMI join, whatever the dictionary's size. Lazy — building it
+    runs no job."""
+    return (anchors
+            .select(F.split("anchor_norm", " ").getItem(0).alias("w"))
+            .filter(F.col("w") != "").distinct())
 
 
 # ------------------------------------------------------------ dictionary probs

@@ -7,9 +7,11 @@ This is the reference's candidate-mention generator
 normalize → probe), recast as a single generator expression that
 whole-stage codegen keeps JVM-side.
 
-Scale note: output is ≤ N× the token count of the corpus — linear, no
-shuffle. The explode happens in the same stage as the parquet scan, so
-column pruning means only (keys, text) are ever read.
+Scale note: output is ≤ N× the token count of the corpus — linear.
+Column pruning means only (keys, text) are ever read. The one
+first-word gate (a broadcast LEFT SEMI join against
+linking.anchor_first_words, at every dictionary size) drops each
+position whose leading normalized token cannot start an anchor key.
 """
 
 from __future__ import annotations
@@ -20,72 +22,54 @@ from pyspark.sql import functions as F
 from .textnorm import normalize_expr, tokenize_expr
 
 
+def _gate(rows: DataFrame, first_words: DataFrame,
+          gate_word: Column) -> DataFrame:
+    """Keep the rows whose ``gate_word`` is a first word of some anchor
+    key: a broadcast LEFT SEMI join against the first-word table (an
+    exact JVM-side hash probe; '' never matches; duplicates in the
+    table change nothing). Both explodes gate on the first WORD of the
+    span's own leading normalized token — a dashed raw token
+    ("Umber-Topaz") normalizes to a multi-word key."""
+    fw = first_words.select(F.col(first_words.columns[0]).alias("_fw"))
+    return rows.join(F.broadcast(fw), gate_word == F.col("_fw"),
+                     "left_semi")
+
+
+def _normalize_tokens(toks: Column) -> Column:
+    return F.transform(toks, normalize_expr)
+
+
 def ngram_struct_expr(tokens_col: str, max_n: int,
-                      norm_tokens_col: str | None = None,
-                      first_words: list[str] | None = None,
-                      with_gate_word: bool = False) -> Column:
-    """Array<struct(span_start, span_len, ngram[, ngram_norm])> of all
-    1..max_n grams. Guarded for empty token arrays (sequence(0,-1)
+                      norm_tokens_col: str) -> Column:
+    """Array<struct(span_start, span_len, ngram, ngram_norm, gate_w)> of
+    all 1..max_n grams. Guarded for empty token arrays (sequence(0,-1)
     would descend).
 
-    ``with_gate_word`` adds a ``gate_w`` field = first word of the
-    span's OWN leading normalized token ('' if that token normalizes
-    away) — the post-explode DataFrame gate joins on it so both
-    physical gate forms (InSet here, broadcast semi join downstream)
-    test the same value and emit identical mention sets even for
-    punctuation-only leading tokens (ADVICE r02).
-
-    When ``norm_tokens_col`` is given, the blocking key ngram_norm is
-    assembled by joining PRE-NORMALIZED tokens — the expensive
-    normalization regexes run once per token instead of once (or, with
-    Catalyst's filter duplication, twice) per n-gram: ~6× less regex
-    work at max_n=3. Safe because normalize is homomorphic over
+    The blocking key ngram_norm is assembled by joining the
+    PRE-NORMALIZED tokens of ``norm_tokens_col`` — the expensive
+    normalization runs once per token instead of once per n-gram: ~6×
+    less work at max_n=3. Safe because normalize is homomorphic over
     space-joined concatenation (empty normalized tokens are dropped
     before joining, matching the whole-string collapse) — pinned by
-    tests/test_ngrams.py::test_tokenwise_norm_equivalence.
+    tests/test_ngram_norm_equiv.py::test_tokenwise_norm_equivalence.
+    ``gate_w`` is the first word of the span's own leading normalized
+    token ('' if that token normalizes away), the value the first-word
+    gate tests.
     """
-    fields = "i AS span_start, n AS span_len, " \
-             f"array_join(slice({tokens_col}, i + 1, n), ' ') AS ngram"
-    typ = "array<struct<span_start:int,span_len:int,ngram:string>>"
-    if norm_tokens_col:
-        fields += (f", array_join(filter(slice({norm_tokens_col}, i + 1, n),"
-                   f" x -> x != ''), ' ') AS ngram_norm")
-        typ = ("array<struct<span_start:int,span_len:int,ngram:string,"
-               "ngram_norm:string>>")
-        if with_gate_word:
-            fields += f", split({norm_tokens_col}[i], ' ')[0] AS gate_w"
-            typ = ("array<struct<span_start:int,span_len:int,ngram:string,"
-                   "ngram_norm:string,gate_w:string>>")
-
-    positions = f"sequence(0, size({tokens_col}) - 1)"
-    if first_words is not None:
-        # first-word gate: a span can only match the dictionary if its
-        # first normalized token starts some anchor key, so skip string
-        # assembly for every other position. Catalyst compiles the IN
-        # over >10 literals to an O(1) InSet hash probe — pure compute,
-        # zero allocation. This is the difference between materializing
-        # ~100× the corpus in n-gram strings (allocation/GC-bound, does
-        # NOT scale with cores) and materializing only plausible
-        # candidates. At dictionaries too large for a literal set, swap
-        # the gate for a broadcast Bloom filter (might_contain) — same
-        # plan shape.
-        gate_col = norm_tokens_col or tokens_col
-        lits = ", ".join("'" + w.replace("'", "''") + "'"
-                         for w in sorted(set(first_words)))
-        if lits:
-            # gate on the first WORD of the normalized token — a dashed
-            # raw token ("Umber-Topaz") normalizes to a multi-word key
-            positions = (f"filter({positions}, "
-                         f"i -> split({gate_col}[i], ' ')[0] IN ({lits}))")
-        else:
-            positions = f"filter({positions}, i -> false)"
+    fields = (f"i AS span_start, n AS span_len, "
+              f"array_join(slice({tokens_col}, i + 1, n), ' ') AS ngram, "
+              f"array_join(filter(slice({norm_tokens_col}, i + 1, n),"
+              f" x -> x != ''), ' ') AS ngram_norm, "
+              f"split({norm_tokens_col}[i], ' ')[0] AS gate_w")
+    typ = ("array<struct<span_start:int,span_len:int,ngram:string,"
+           "ngram_norm:string,gate_w:string>>")
 
     return F.expr(
         f"""
         CASE WHEN size({tokens_col}) = 0 THEN
           CAST(array() AS {typ})
         ELSE
-          flatten(transform({positions}, i ->
+          flatten(transform(sequence(0, size({tokens_col}) - 1), i ->
             transform(sequence(1, least({max_n}, size({tokens_col}) - i)), n ->
               struct({fields}))))
         END
@@ -98,41 +82,40 @@ def explode_mentions_hof(
     text_col: str = "text",
     key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
     max_n: int = 3,
-    first_words: "list[str] | DataFrame | None" = None,
+    first_words: DataFrame | None = None,
     carry_cols: tuple[str, ...] = (),
-    keep_empty_norm: bool = False,
+    norm_tokens_fn=_normalize_tokens,
 ) -> DataFrame:
     """Array/higher-order-function variant of :func:`explode_mentions`.
-
-    ``keep_empty_norm=True`` keeps spans whose ASCII-normalized key is
-    empty — for callers that re-derive the blocking key afterwards
-    (the streaming unicode path: CJK tokens ASCII-normalize to '').
 
     Same output. Used for STREAMING inputs (window functions are not
     supported on streaming DataFrames); micro-batches are small enough
     that the HOF lambda thread-contention that rules this path out for
     batch (see explode_mentions) doesn't matter.
 
+    ``norm_tokens_fn`` maps the token array to its normalized token
+    array, once per turn: the default codegen ASCII normalizer per
+    element, or textnorm.normalize_unicode_tokens_udf
+    (cfg.unicode_normalize) — a pandas UDF cannot run inside the HOF
+    lambda, so it normalizes the whole array in one Arrow pass.
+
+    ``first_words`` gates post-explode (a stream-static broadcast semi
+    join) on each span's ``gate_w`` — the value the batch explode
+    gates on, so both emit identical mention sets.
+
     ``carry_cols`` ride through unchanged without joining mention_id —
     the streaming path carries the event-time column this way, so the
     watermark survives the explode and no stream-stream self-join is
     ever needed.
     """
-    fw_df = first_words if isinstance(first_words, DataFrame) else None
-    fw_list = None if fw_df is not None else first_words
     toks = df.select(
         *key_cols, *carry_cols,
         tokenize_expr(F.col(text_col)).alias("_toks"),
-    ).withColumn("_ntoks", F.transform(F.col("_toks"),
-                                       lambda t: normalize_expr(t)))
-    extra = [F.col("g.gate_w").alias("_gate_w")] if fw_df is not None else []
+    ).withColumn("_ntoks", norm_tokens_fn(F.col("_toks")))
     m = (
         toks.select(
             *key_cols, *carry_cols,
-            F.explode(ngram_struct_expr("_toks", max_n, "_ntoks",
-                                        fw_list,
-                                        with_gate_word=fw_df is not None))
-            .alias("g"),
+            F.explode(ngram_struct_expr("_toks", max_n, "_ntoks")).alias("g"),
         )
         .select(
             *key_cols, *carry_cols,
@@ -140,25 +123,18 @@ def explode_mentions_hof(
             F.col("g.span_len").alias("span_len"),
             F.col("g.ngram").alias("ngram"),
             F.col("g.ngram_norm").alias("ngram_norm"),
-            *extra,
+            F.col("g.gate_w").alias("_gate_w"),
         )
+        .filter(F.col("ngram_norm") != "")
     )
-    if not keep_empty_norm:
-        m = m.filter(F.col("ngram_norm") != "")
-    if fw_df is not None:
-        # streaming path gates post-explode (stream-static broadcast
-        # semi join) on the span's OWN leading normalized token — the
-        # same value the InSet form gates on, so the two physical forms
-        # emit identical mention sets ('' never matches; ADVICE r02)
-        g = fw_df.select(F.col(fw_df.columns[0]).alias("_fw")).distinct()
-        m = (m.join(F.broadcast(g), F.col("_gate_w") == F.col("_fw"),
-                    "left_semi")
-             .drop("_gate_w"))
+    if first_words is not None:
+        m = _gate(m, first_words, F.col("_gate_w"))
     id_parts = [F.col(c).cast("string") for c in key_cols] + [
         F.col("span_start").cast("string"),
         F.col("span_len").cast("string"),
     ]
-    return m.withColumn("mention_id", F.concat_ws(":", *id_parts))
+    return (m.drop("_gate_w")
+            .withColumn("mention_id", F.concat_ws(":", *id_parts)))
 
 
 def explode_mentions(
@@ -166,7 +142,7 @@ def explode_mentions(
     text_col: str = "text",
     key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
     max_n: int = 3,
-    first_words: "list[str] | DataFrame | None" = None,
+    first_words: DataFrame | None = None,
     norm_fn=normalize_expr,
 ) -> DataFrame:
     """transcripts → mentions(key_cols..., mention_id, span_start,
@@ -176,6 +152,19 @@ def explode_mentions(
     ASCII path, or textnorm.normalize_unicode_udf for non-Latin corpora
     (cfg.unicode_normalize) — it runs once per exploded token row, so a
     pandas UDF slots in without touching the n-gram assembly.
+
+    ``first_words`` (a one-column DataFrame, linking.anchor_first_words)
+    gates token rows before n-gram assembly: a span can only match the
+    dictionary if the first word of its leading normalized token starts
+    some anchor key, so every other position is dropped by a broadcast
+    LEFT SEMI join before any n-gram string is built. This is the
+    difference between materializing ~100× the corpus in n-gram strings
+    (allocation/GC-bound, does NOT scale with cores) and materializing
+    only plausible candidates. ~500k first words broadcast in ~10 MB;
+    a first-word table too big to broadcast needs a shuffle semi join
+    instead (Spark's runtime Bloom filters,
+    spark.sql.optimizer.runtime.bloomFilter.enabled, then prune the
+    probe side).
 
     Implementation is deliberately LAMBDA-FREE: Spark evaluates
     higher-order-function lambdas (transform/filter) on a shared
@@ -188,7 +177,7 @@ def explode_mentions(
       → normalize per ROW (plain translate chain) — scales (codegen)
       → window lead() for the following max_n-1 raw+norm tokens
         (ONE shuffle of the token stream, keyed by turn — scales)
-      → optional first-word InSet gate (O(1) probe per row)
+      → optional first-word gate (broadcast semi join per row)
       → n-gram assembly via concat_ws/nullif (NULL-skipping concat
         reproduces whole-string normalization; '' norms become NULL)
       → explode of a 3-element literal struct array (no lambda).
@@ -217,28 +206,7 @@ def explode_mentions(
         rows = rows.withColumn(f"nrm{k}", F.lead("nrm", k).over(w))
 
     if first_words is not None:
-        if isinstance(first_words, DataFrame):
-            # large-dictionary gate (SURVEY F4 fallback): the first-word
-            # set doesn't fit a literal InSet, so gate via a broadcast
-            # LEFT SEMI join — an exact JVM-side hash probe with the
-            # same plan position (before n-gram assembly). ~500k words
-            # broadcast in ~10 MB; beyond ~1e8 distinct first words,
-            # swap the broadcast table for a Bloom filter (Spark's AQE
-            # runtime row-filters do this automatically for semi joins
-            # when spark.sql.optimizer.runtime.bloomFilter.enabled).
-            fw_df = first_words.select(
-                F.col(first_words.columns[0]).alias("_fw")).distinct()
-            rows = rows.join(
-                F.broadcast(fw_df),
-                F.split(F.col("nrm"), " ").getItem(0) == F.col("_fw"),
-                "left_semi")
-        else:
-            fw = sorted({w0 for w0 in first_words if w0})
-            if fw:
-                rows = rows.filter(
-                    F.split(F.col("nrm"), " ").getItem(0).isin(fw))
-            else:
-                rows = rows.filter(F.lit(False))
+        rows = _gate(rows, first_words, F.split(F.col("nrm"), " ").getItem(0))
 
     def gram(n: int):
         raw = [F.col("tok")] + [F.col(f"tok{k}") for k in range(1, n)]

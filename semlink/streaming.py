@@ -30,7 +30,7 @@ from .linking import candidate_join, generate_mentions
 def stream_candidates(transcript_stream: DataFrame, anchors: DataFrame,
                       cfg: SemlinkConfig = DEFAULT,
                       watermark: str = "10 minutes",
-                      first_words=None) -> DataFrame:
+                      first_words: DataFrame | None = None) -> DataFrame:
     """Stateless linking over a streaming transcripts DataFrame.
 
     Returns a streaming DataFrame of candidate links; attach a sink:
@@ -47,10 +47,12 @@ def stream_candidates(transcript_stream: DataFrame, anchors: DataFrame,
     the source reads, and the join muddied late-row accounting).
 
     Mention generation is the SAME generate_mentions the batch path
-    uses (streaming=True, ts carried) — cfg.unicode_normalize and the
-    first-word gate behave identically in both engines (round 2 called
-    explode_mentions_hof directly and silently dropped the unicode
-    re-derivation: CJK corpora streamed zero candidates — ADVICE r02).
+    uses (streaming=True, ts carried), so cfg.unicode_normalize and the
+    first-word gate behave identically in both engines: tokens are
+    normalized by the same per-string function, and ``first_words``
+    (linking.anchor_first_words) gates every span on the first word of
+    its own leading normalized token, here as a stream-static broadcast
+    semi join.
     """
     t = transcript_stream.withWatermark("ts", watermark)
     mentions = generate_mentions(t, cfg, first_words=first_words,

@@ -134,6 +134,24 @@ def tokenize_expr(col: Column) -> Column:
 
 # ------------------------------------------------------- Unicode fallback
 
+_DASH_TBL = {ord(c): " " for c in _DASHES}
+
+
+def _normalize_unicode_str(x: str | None) -> str | None:
+    """One string's full-Unicode blocking key (see
+    :func:`normalize_unicode_udf`); None stays None."""
+    if x is None:
+        return None
+    x = x.translate(_DASH_TBL)
+    x = "".join(c for c in _ud.normalize("NFKD", x) if not _ud.combining(c))
+    x = x.casefold()
+    # DELETE non-alnum, keeping only the literal space — exact
+    # ASCII-path semantics ("don't" → "dont"; tabs/newlines are junk
+    # chars there and get deleted, not spaced)
+    x = "".join(c for c in x if c.isalnum() or c == " ")
+    return " ".join(x.split())
+
+
 def normalize_unicode_udf(col: Column) -> Column:
     """Full-Unicode blocking key as an Arrow-batched pandas UDF — the
     documented fallback for non-Latin corpora (config flag
@@ -156,26 +174,27 @@ def normalize_unicode_udf(col: Column) -> Column:
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    dash_tbl = {ord(c): " " for c in _DASHES}
-
     @pandas_udf("string")
     def _norm(s: pd.Series) -> pd.Series:
-        import unicodedata
+        return s.map(_normalize_unicode_str)
 
-        def one(x):
-            if x is None:
-                return None
-            x = x.translate(dash_tbl)
-            x = "".join(c for c in unicodedata.normalize("NFKD", x)
-                        if not unicodedata.combining(c))
-            x = x.casefold()
-            # DELETE non-alnum, keeping only the literal space — exact
-            # ASCII-path semantics ("don't" → "dont"; tabs/newlines are
-            # junk chars there and get deleted, not spaced)
-            x = "".join(c for c in x if c.isalnum() or c == " ")
-            return " ".join(x.split())
+    return _norm(col)
 
-        return s.map(one)
+
+def normalize_unicode_tokens_udf(col: Column) -> Column:
+    """:func:`normalize_unicode_udf` over an array<string> column: every
+    element normalized by the same per-string function, in one Arrow
+    pass per batch of arrays. The streaming explode normalizes its
+    token array once per turn this way, because a pandas UDF cannot
+    run inside a higher-order-function lambda."""
+    global pd
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("array<string>")
+    def _norm(s: pd.Series) -> pd.Series:
+        return s.map(lambda toks: None if toks is None
+                     else [_normalize_unicode_str(t) for t in toks])
 
     return _norm(col)
 

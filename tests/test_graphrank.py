@@ -46,3 +46,13 @@ def test_pagerank_uniform_on_cycle(spark):
     assert len(set(got.values())) == 1
     total = sum(got.values())
     assert abs(total - SCALE9) <= 2 * n * 3
+
+
+def test_pagerank_empty_edges(spark):
+    """An empty edge set gives an empty (id, pr9) table: N = 0 comes
+    from the node cut's observed count and is never divided by."""
+    from semlink.graphrank import pagerank
+    df = spark.createDataFrame([], "src_id long, dst_id long")
+    r = pagerank(df, iters=3)
+    assert r.columns == ["id", "pr9"] and r.collect() == []
+    assert dict(r.dtypes)["pr9"] == "bigint"

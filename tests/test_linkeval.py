@@ -179,6 +179,28 @@ def test_snm_pairs_window_two_and_carry(spark):
     assert got == {(1, 2, "a", "b"), (2, 3, "b", "c")}
 
 
+def test_snm_plan_does_not_depend_on_data(spark):
+    """The per-partition rank offsets are computed in the plan, not
+    collected to the driver and baked in as literals: two inputs of
+    one schema but different sizes give the same formatted plan once
+    expression, node and RDD ids are stripped."""
+    import io as _io
+    import re
+    from contextlib import redirect_stdout
+
+    def plan(n):
+        recs = spark.createDataFrame(
+            [(i, (i * 37) % 101) for i in range(n)], "rec_id long, k long")
+        buf = _io.StringIO()
+        with redirect_stdout(buf):
+            sorted_neighborhood_pairs(recs, "k", 3).explain("formatted")
+        return re.sub(r"#\d+L?|\(\d+\)|\[codegen id : \d+\]"
+                      r"|RDD\[\d+\]|ExistingRDD\[[^\]]*\]|plan_id=\d+", "",
+                      buf.getvalue())
+
+    assert plan(20) == plan(300)
+
+
 def test_blocking_quality_query_nontrivial(spark):
     """Two scheme rows. Nation blocking: all three metrics strictly
     inside (0, 1) — key corruption loses true pairs (pc < 1) while

@@ -1,6 +1,7 @@
 """Spark-free source checks that keep the engine's plan-shaping rules:
-``ops.cut`` is the only lineage cut and no job probes a table's
-emptiness (a cut already counted its rows)."""
+``ops.cut`` is the only lineage cut, no job probes a table's
+emptiness (a cut already counted its rows), and the link layer runs no
+driver collect (its only actions are its cuts)."""
 import pathlib
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "semlink"
@@ -20,4 +21,11 @@ def test_local_checkpoint_only_in_ops():
 def test_no_emptiness_probe_jobs():
     hits = [name for name, src in _sources().items()
             if "limit(1).count()" in src]
+    assert hits == []
+
+
+def test_no_collect_in_link_layer():
+    src = _sources()
+    hits = [name for name in ("semlink/linking.py", "semlink/ngrams.py")
+            if ".collect(" in src[name]]
     assert hits == []

@@ -1,5 +1,6 @@
 """T3 n-gram explode: span correctness + DuckDB-oracle parity."""
 import duckdb
+import pytest
 
 from semlink.ngrams import explode_mentions, ngram_duckdb_sql
 
@@ -40,69 +41,81 @@ def test_ngram_duckdb_parity(spark):
     assert got == oracle
 
 
-def test_first_word_gate_dataframe_equals_inset(spark):
-    """F4 large-dictionary gate: the broadcast-semi-join form must
-    produce exactly the InSet-literal form's mentions, and the plan
-    must gate via a broadcast join (the gate never silently vanishes
-    for big dictionaries — VERDICT r01 missing #4)."""
+# (mention_id, ngram, ngram_norm) of GATE_ROWS at max_n=2 gated on
+# GATE_WORDS, by hand: "beta-gamma" normalizes to "beta gamma", so its
+# first word "beta" passes; "--" normalizes to '', so the
+# punctuation-led span "-- alpha" (key "alpha") is gated out
+GATE_ROWS = [("c1", 0, "Alpha beta-gamma delta"),
+             ("c2", 0, "-- alpha beta"),
+             ("c3", 0, "Gamma! zeta")]
+GATE_WORDS = ["alpha", "beta", "gamma"]
+GATED = {
+    ("c1:0:0:1", "Alpha", "alpha"),
+    ("c1:0:0:2", "Alpha beta-gamma", "alpha beta gamma"),
+    ("c1:0:1:1", "beta-gamma", "beta gamma"),
+    ("c1:0:1:2", "beta-gamma delta", "beta gamma delta"),
+    ("c2:0:1:1", "alpha", "alpha"),
+    ("c2:0:1:2", "alpha beta", "alpha beta"),
+    ("c2:0:2:1", "beta", "beta"),
+    ("c3:0:0:1", "Gamma!", "gamma"),
+    ("c3:0:0:2", "Gamma! zeta", "gamma zeta"),
+}
+
+
+def _formatted(df):
     import io as _io
     from contextlib import redirect_stdout
-
-    from semlink.ngrams import explode_mentions
-
-    rows = [(f"c{i}", 0, f"alpha{i % 7} beta{i % 5} gamma delta{i % 3}")
-            for i in range(200)]
-    t = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
-    fw_list = [f"alpha{k}" for k in range(7)] + ["gamma"]
-    fw_df = spark.createDataFrame([(w,) for w in fw_list], "w string")
-
-    a = explode_mentions(t, first_words=fw_list)
-    b = explode_mentions(t, first_words=fw_df)
-    cols = ["mention_id", "ngram", "ngram_norm"]
-    assert a.select(cols).exceptAll(b.select(cols)).count() == 0
-    assert b.select(cols).exceptAll(a.select(cols)).count() == 0
-    assert a.count() > 0
-
     buf = _io.StringIO()
     with redirect_stdout(buf):
-        b.explain("formatted")
-    plan = buf.getvalue()
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+@pytest.mark.parametrize("hof", [False, True], ids=["batch", "hof"])
+def test_first_word_gate_hand_computed(spark, hof):
+    """F4 first-word gate: both explodes keep exactly the spans whose
+    OWN leading normalized token's first word starts an anchor — the
+    batch one before n-gram assembly, the streaming (HOF) one after —
+    through a broadcast semi join, never a literal IN list."""
+    from semlink.ngrams import explode_mentions_hof
+
+    explode = explode_mentions_hof if hof else explode_mentions
+    t = spark.createDataFrame(GATE_ROWS,
+                              "conv_id string, turn_idx int, text string")
+    fw = spark.createDataFrame([(w,) for w in GATE_WORDS], "w string")
+    cols = ["mention_id", "ngram", "ngram_norm"]
+    m = explode(t, max_n=2, first_words=fw)
+    assert {tuple(r) for r in m.select(cols).collect()} == GATED
+    plan = _formatted(m)
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
+    assert "IN (" not in plan and "INSET" not in plan
+    # the ungated explode keeps the punctuation-led span the gate drops
+    ungated = {tuple(r) for r in explode(t, max_n=2).select(cols).collect()}
+    assert ("c2:0:0:2", "-- alpha", "alpha") in ungated and GATED < ungated
+    empty = spark.createDataFrame([], "w string")
+    assert explode(t, max_n=2, first_words=empty).count() == 0
 
 
-def test_anchor_first_words_switches_to_dataframe(spark):
+def test_anchor_first_words_runs_no_job(spark):
+    """anchor_first_words is a lazy one-column DataFrame at every
+    dictionary size: building it starts no Spark job."""
     from pyspark.sql import DataFrame as _DF
 
     from semlink.linking import anchor_first_words
 
     anchors = spark.createDataFrame(
-        [(f"anchor{i} tail", i) for i in range(50)],
+        [(f"anchor{i} tail", i) for i in range(50)] + [("", 50)],
         "anchor_norm string, target_id long")
-    small = anchor_first_words(anchors, max_set_size=100)
-    assert isinstance(small, list) and "anchor7" in small
-    big = anchor_first_words(anchors, max_set_size=10)
-    assert isinstance(big, _DF)
-    assert {r.w for r in big.collect()} == {f"anchor{i}" for i in range(50)}
-
-def test_hof_gate_forms_agree_on_empty_norm_leading_tokens(spark):
-    """ADVICE r02: the HOF DataFrame gate must test the span's OWN
-    leading normalized token (like the InSet form), so spans whose
-    leading token normalizes to '' — punctuation-only tokens — are
-    gated identically by both physical forms."""
-    from semlink.ngrams import explode_mentions_hof
-
-    rows = [("c1", 0, "-- alpha beta"),       # '--' normalizes to ''
-            ("c2", 0, "alpha !! gamma"),
-            ("c3", 0, "?? ,, alpha")]
-    t = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
-    fw = ["alpha", "gamma"]
-    fw_df = spark.createDataFrame([(w,) for w in fw], "w string")
-
-    a = explode_mentions_hof(t, first_words=fw)
-    b = explode_mentions_hof(t, first_words=fw_df)
-    cols = ["mention_id", "ngram", "ngram_norm"]
-    sa = {tuple(r) for r in a.select(cols).collect()}
-    sb = {tuple(r) for r in b.select(cols).collect()}
-    assert sa == sb and len(sa) > 0
-    # a span led by a punctuation-only token is gated OUT by both forms
-    assert not any(r[1].startswith("--") for r in sa)
+    sc = spark.sparkContext
+    group = "anchor-first-words-test"
+    sc.setJobGroup(group, "anchor_first_words starts no job")
+    try:
+        fw = anchor_first_words(anchors)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        words = {r.w for r in fw.collect()}
+        # the tracker does see jobs in this group
+        assert sc.statusTracker().getJobIdsForGroup(group) != []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert isinstance(fw, _DF)
+    assert words == {f"anchor{i}" for i in range(50)}

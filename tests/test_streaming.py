@@ -163,8 +163,8 @@ def test_foreach_batch_append_sink(spark, fx_tiny_dfs, tmp_path):
 def test_stream_candidates_unicode_cjk(spark, tmp_path):
     """ADVICE r02: cfg.unicode_normalize must work through
     stream_candidates (not only generate_mentions) — CJK corpora stream
-    real candidates, and the first-word gate is applied AFTER the
-    unicode re-derivation so it matches CJK keys."""
+    real candidates, and the first-word gate tests the unicode-
+    normalized tokens so it matches CJK keys."""
     import datetime
 
     from semlink.config import SemlinkConfig
@@ -174,8 +174,8 @@ def test_stream_candidates_unicode_cjk(spark, tmp_path):
              t0 + datetime.timedelta(minutes=i)) for i in range(3)]
     # punctuation-led turn (ADVICE r03): the "（ 東京" span's leading
     # raw token normalizes to '' — batch drops it at the gate, so
-    # streaming must too (gate on the normalized leading raw token,
-    # not the first word of the collapsed whole-ngram key)
+    # streaming must too (both gate on the span's own leading
+    # normalized token, not on the first word of its whole key)
     rows.append(("cj", 3, "user", "（ 東京 タワー", "",
                  t0 + datetime.timedelta(minutes=3)))
     schema = ("conv_id string, turn_idx int, role string, text string, "
@@ -190,8 +190,8 @@ def test_stream_candidates_unicode_cjk(spark, tmp_path):
     src = str(tmp_path / "cjk_src")
     t.coalesce(1).write.parquet(src)
     stream = spark.readStream.schema(t.schema).parquet(src)
-    out = stream_candidates(stream, anchors, cfg,
-                            first_words=["東京"])
+    fw = spark.createDataFrame([("東京",)], "w string")
+    out = stream_candidates(stream, anchors, cfg, first_words=fw)
     q = (out.select("mention_id", "target_id", "ts").writeStream
          .format("memory").queryName("cjk_t")
          .option("checkpointLocation", str(tmp_path / "cjk_ckpt"))
@@ -201,7 +201,7 @@ def test_stream_candidates_unicode_cjk(spark, tmp_path):
            for r in spark.sql("select * from cjk_t").collect()}
 
     batch = candidate_join(
-        generate_mentions(t, cfg, first_words=["東京"]), anchors, cfg)
+        generate_mentions(t, cfg, first_words=fw), anchors, cfg)
     expected = {(r.mention_id, r.target_id)
                 for r in batch.select("mention_id", "target_id").collect()}
     assert got == expected and len(got) > 0

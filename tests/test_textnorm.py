@@ -105,23 +105,60 @@ def test_pipeline_runs_with_unicode_flag(spark, fx_tiny_dfs):
 
 
 def test_unicode_streaming_path_matches_batch(spark):
-    """cfg.unicode_normalize works on the streaming (HOF) mention path
-    via post-explode re-normalization; blocking keys match the batch
-    path on a CJK corpus."""
+    """cfg.unicode_normalize works on the streaming (HOF) mention path,
+    which normalizes each turn's token array once; blocking keys match
+    the batch path on a CJK corpus, ungated and gated by a first-word
+    DataFrame, and the gated streaming plan crosses into Python once."""
+    import io as _io
+    from contextlib import redirect_stdout
+
     from semlink.config import SemlinkConfig
     from semlink.linking import generate_mentions
 
     rows = [("c1", 0, "東京 タワー は 高い 🗼"),
-            ("c2", 1, "Café au-lait delicious")]
+            ("c2", 1, "Café au-lait delicious"),
+            ("c3", 2, "（ 東京 タワー")]
     t = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
+    fw = spark.createDataFrame([("東京",), ("cafe",)], "w string")
     cfg = SemlinkConfig(unicode_normalize=True, max_ngram_len=2)
-    batch = generate_mentions(t, cfg)
-    stream_shaped = generate_mentions(t, cfg, streaming=True)
     cols = ["mention_id", "ngram_norm"]
-    a = {tuple(r) for r in batch.select(cols).collect()}
-    b = {tuple(r) for r in stream_shaped.select(cols).collect()}
-    assert a == b and len(a) > 0
-    assert any("東京" in k for _, k in a)
+    for first_words in (None, fw):
+        batch = generate_mentions(t, cfg, first_words=first_words)
+        stream_shaped = generate_mentions(t, cfg, first_words=first_words,
+                                          streaming=True)
+        a = {tuple(r) for r in batch.select(cols).collect()}
+        b = {tuple(r) for r in stream_shaped.select(cols).collect()}
+        assert a == b and len(a) > 0
+        assert any("東京" in k for _, k in a)
+    # gated: the punctuation-led "（ 東京" span is dropped, its
+    # successor kept
+    assert ("c3:2:0:2", "東京") not in a and ("c3:2:1:1", "東京") in a
+    assert {m for m, _ in a} == {"c1:0:0:1", "c1:0:0:2", "c2:1:0:1",
+                                 "c2:1:0:2", "c3:2:1:1", "c3:2:1:2"}
+
+    buf = _io.StringIO()
+    with redirect_stdout(buf):
+        stream_shaped.explain("formatted")
+    assert buf.getvalue().count("ArrowEvalPython (") == 1
+
+
+def test_unicode_tokens_udf_matches_scalar_udf(spark):
+    """The array form normalizes each element exactly as the scalar
+    UDF normalizes that string; null arrays stay null."""
+    from pyspark.sql import functions as F
+
+    from semlink.textnorm import (normalize_unicode_tokens_udf,
+                                  normalize_unicode_udf)
+
+    toks = [["東京", "タワー🗼", "Café", "au-lait", "!!"], [], None]
+    df = spark.createDataFrame([(x,) for x in toks], "t array<string>")
+    got = [r.n for r in df.select(
+        normalize_unicode_tokens_udf(F.col("t")).alias("n")).collect()]
+    assert got == [["東京", "タワー", "cafe", "au lait", ""], [], None]
+    flat = (df.select(F.explode("t").alias("s"))
+            .select("s", normalize_unicode_udf(F.col("s")).alias("n"))
+            .collect())
+    assert [r.n for r in flat] == got[0]
 
 
 def test_soundex_expr_matches_builtin_codec(spark):
